@@ -56,4 +56,28 @@ object GraftSession {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
+
+  /** Run `body` with the given session confs set, then put each key
+    * back as it was — in `finally`, so a throwing body restores too. A
+    * key that had a value gets it back (a deployment's spark-defaults
+    * value included); a key that had none is unset.
+    *
+    * The override is SESSION-GLOBAL, not scoped to the calling thread:
+    * every query planned on this session while `body` runs sees it. Do
+    * not call this from branches run concurrently on one session
+    * (`Similarity.inParallel`) — a sibling would plan under, and could
+    * restore over, this override.
+    */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    // getAll holds only explicitly-set keys: a key left at Spark's
+    // default reads as None here and is unset again, not pinned
+    val explicit = spark.conf.getAll
+    val prior = confs.map { case (k, _) => k -> explicit.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -38,9 +38,10 @@ private[graft] object Cc {
   /** Shuffle-partition count for a CC/loop scope (r15 VERDICT item 6):
     * the loop shuffles a vertex-set-sized relation dozens of times, so
     * its reducer count should track the LOOP RELATION'S size, not the
-    * session's scan parallelism — derived as max(8, rows/1M) with a
-    * plain scale cap. At gate scale every caller resolves to 8 (the
-    * constant the r15 scopes hardcoded — bench numbers unchanged); at
+    * session's scan parallelism — derived as max(8, rows/128k), capped
+    * at 4096 (128k = [[LoopRowsPerPartition]]). At gate scale every
+    * caller resolves to 8 (the constant the r15 scopes hardcoded —
+    * bench numbers unchanged); at
     * 100 TB a reduced graph of billions of pairs gets thousands of
     * reducers instead of being serialized onto 8. The vertex count
     * rides the initial label-sum action [[minLabelComponents]] already
@@ -83,63 +84,61 @@ private[graft] object Cc {
     }
     var converged = false
     var rounds = 0
-    // scope the LOOP's shuffles (not the initial distinct above,
-    // which is |E|-sized and ran at the caller's parallelism) to the
-    // size-derived reducer count; restored in the finally below —
-    // the returned plan executes under the caller's conf
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      loopPartitions(nVerts).toString)
     // the round's freshly-created checkpoint, tracked until it is
     // swapped into `labels`: if labelSum(next) or the old round's
     // free throws AFTER the checkpoint succeeded, the catch below
     // must release these blocks too or they stay parked for the run
     var inflight: Option[(DataFrame, Set[Int])] = None
-    try {
-      while (!converged && rounds < maxRounds) {
-        val viaNeighbors = edges
-          .join(labels, edges("dst") === labels("v"))
-          .select(edges("src").as("v"), col("label"))
-        val minned = labels.unionByName(viaNeighbors)
-          .groupBy("v").agg(min(col("label")).as("label"))
-        // pointer jump: follow the label to ITS label (label(x) <= x
-        // monotonically, so the jump only ever lowers labels further)
-        val lut = minned.select(col("v").as("lid"), col("label").as("llabel"))
-        // LAZY checkpoint: the labelSum action below materializes the
-        // round's blocks, folding what was a checkpoint job + an agg
-        // job into ONE job per round (the pagerank fixpoint's r14
-        // convention, applied to the CC kernel in r15 — the loop runs
-        // at 8 partitions where per-job constants dominate). The
-        // blocks ARE materialized before the old round is freed:
-        // labelSum runs first (the Rounds lazy-caller contract).
-        val (next, nextIds) = Rounds.checkpoint(eager = false, df =
-          minned.join(lut, minned("label") === lut("lid"))
-            .select(minned("v"), col("llabel").as("label")))
-        inflight = Some((next, nextIds))
-        val nextSum = labelSum(next)
-        Rounds.free(labels, labelIds)
-        labelIds = nextIds
-        labels = next
-        inflight = None
-        converged = nextSum == prevSum // labels only ever decrease
-        prevSum = nextSum
-        rounds += 1
+    // scope the LOOP's shuffles (not the initial distinct above,
+    // which is |E|-sized and ran at the caller's parallelism) to the
+    // size-derived reducer count — the returned plan executes under
+    // the caller's conf
+    graft.GraftSession.withConf(spark,
+        "spark.sql.shuffle.partitions" -> loopPartitions(nVerts).toString) {
+      try {
+        while (!converged && rounds < maxRounds) {
+          val viaNeighbors = edges
+            .join(labels, edges("dst") === labels("v"))
+            .select(edges("src").as("v"), col("label"))
+          val minned = labels.unionByName(viaNeighbors)
+            .groupBy("v").agg(min(col("label")).as("label"))
+          // pointer jump: follow the label to ITS label (label(x) <= x
+          // monotonically, so the jump only ever lowers labels further)
+          val lut = minned.select(col("v").as("lid"), col("label").as("llabel"))
+          // LAZY checkpoint: the labelSum action below materializes the
+          // round's blocks, folding what was a checkpoint job + an agg
+          // job into ONE job per round (the pagerank fixpoint's r14
+          // convention, applied to the CC kernel in r15 — the loop runs
+          // at 8 partitions where per-job constants dominate). The
+          // blocks ARE materialized before the old round is freed:
+          // labelSum runs first (the Rounds lazy-caller contract).
+          val (next, nextIds) = Rounds.checkpoint(eager = false, df =
+            minned.join(lut, minned("label") === lut("lid"))
+              .select(minned("v"), col("llabel").as("label")))
+          inflight = Some((next, nextIds))
+          val nextSum = labelSum(next)
+          Rounds.free(labels, labelIds)
+          labelIds = nextIds
+          labels = next
+          inflight = None
+          converged = nextSum == prevSum // labels only ever decrease
+          prevSum = nextSum
+          rounds += 1
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"$opName: min-label propagation did not converge in $maxRounds " +
+              s"pointer-jumping rounds (component diameter > ~2^$maxRounds?)")
+      } catch {
+        case e: Throwable =>
+          // failure path: release the loop's storage (including an
+          // in-flight round not yet swapped in) before propagating;
+          // freeQuietly so a cleanup failure can never mask e
+          inflight.foreach { case (df, ids) => Rounds.freeQuietly(df, ids) }
+          Rounds.freeQuietly(labels, labelIds)
+          try edges.unpersist(blocking = false) catch { case _: Throwable => () }
+          throw e
       }
-      if (!converged)
-        throw new IllegalStateException(
-          s"$opName: min-label propagation did not converge in $maxRounds " +
-            s"pointer-jumping rounds (component diameter > ~2^$maxRounds?)")
-    } catch {
-      case e: Throwable =>
-        // failure path: release the loop's storage (including an
-        // in-flight round not yet swapped in) before propagating;
-        // freeQuietly so a cleanup failure can never mask e
-        inflight.foreach { case (df, ids) => Rounds.freeQuietly(df, ids) }
-        Rounds.freeQuietly(labels, labelIds)
-        try edges.unpersist(blocking = false) catch { case _: Throwable => () }
-        throw e
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     // the FINAL round's checkpoint stays persisted — the returned plan
     // reads it; ContextCleaner reclaims it when the plan is GC'd

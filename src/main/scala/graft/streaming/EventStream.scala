@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming pipelines over event streams — the streaming
   * counterpart of graft.queries.EventOps (the reference schedules
@@ -208,8 +209,7 @@ object EventStream {
   /** Wire a streaming DataFrame to an in-memory sink (used by specs
     * and local smoke; production would use a parquet/Kafka sink).
     */
-  def startMemorySink(df: DataFrame, name: String, outputMode: OutputMode)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+  def startMemorySink(df: DataFrame, name: String, outputMode: OutputMode): StreamingQuery =
     df.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
 
   /** RocksDB state store provider class — the at-scale state backend:
@@ -222,38 +222,15 @@ object EventStream {
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private val StateStoreConfKeys = Seq(
-    "spark.sql.streaming.stateStore.providerClass",
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-
-  /** Session-level conf enabling RocksDB state + changelog
-    * checkpointing (call once before starting stateful queries; per-
-    * query override is not supported by Spark — the provider is a
-    * session conf by design). Returns the PRIOR values of the confs
-    * it touches — pass them to [[restoreStateStoreConf]] rather than
-    * unsetting: a deployment that configured its provider in
-    * spark-defaults must get that provider back, not the default
-    * (an unset would silently flip every later checkpointed stateful
-    * query to the heap store).
+  /** Session confs selecting [[RocksDbProvider]] with changelog
+    * checkpointing (checkpoint deltas instead of full SST uploads per
+    * batch). The provider is a session conf by design — Spark has no
+    * per-query override — so stateful callers scope it with
+    * `GraftSession.withConf(spark, RocksDbState: _*)`.
     */
-  def enableRocksDbState(spark: SparkSession): Map[String, Option[String]] = {
-    val prior = StateStoreConfKeys.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    // checkpoint deltas instead of full SST uploads per batch
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    prior
-  }
-
-  /** Put the state-store confs back exactly as [[enableRocksDbState]]
-    * found them (set-or-unset per key).
-    */
-  def restoreStateStoreConf(spark: SparkSession,
-      prior: Map[String, Option[String]]): Unit =
-    prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+  val RocksDbState: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** Run a streaming query with Trigger.AvailableNow against a real
     * checkpoint: process EVERYTHING currently in the source across as
@@ -263,14 +240,60 @@ object EventStream {
     * checkpoint exactly-once). Blocks until the query drains.
     */
   def runAvailableNow(df: DataFrame, name: String, outputMode: OutputMode,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val q = df.writeStream
+      checkpointDir: String): StreamingQuery =
+    awaitAvailableNow(df.writeStream
       .format("memory").queryName(name).outputMode(outputMode)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .option("checkpointLocation", checkpointDir))
+
+  /** Start `writer` with Trigger.AvailableNow and block until it has
+    * drained — the one trigger-and-await body every drain shares,
+    * whatever its sink (memory, parquet, foreachBatch).
+    */
+  private[graft] def awaitAvailableNow(writer: DataStreamWriter[_]): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     q
+  }
+
+  /** Run `body` against a fresh checkpoint dir and delete the dir when
+    * `body` returns or throws. A drain's checkpoint is dead once the
+    * query has terminated; keeping it until JVM exit only piles up
+    * temp files per run.
+    */
+  private[graft] def withCheckpoint[T](body: String => T): T = {
+    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
+    try body(ckpt) finally graft.ops.Dedup.deleteDirQuietly(ckpt)
+  }
+
+  /** Shuffle (= state-store) partition scope for every drain. The
+    * drains are bounded — state is at most |users| keys, or
+    * window-grain rows — so the session's 32 partitions would only
+    * multiply per-batch store init and checkpoint cost (a stream-stream
+    * join opens four stores per partition). The conf is read at stream
+    * start.
+    */
+  private[streaming] val DrainPartitions = "spark.sql.shuffle.partitions" -> "8"
+
+  private val drainCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Drain `df` once: AvailableNow into a memory sink under a unique
+    * query name and a fresh checkpoint, with shuffle partitions scoped
+    * to [[DrainPartitions]]. Returns the drained rows and the finished
+    * query (its `recentProgress` stays readable). The rows are resolved
+    * before the sink's temp view is dropped and the checkpoint deleted,
+    * so a drain leaves nothing in the catalog or under the temp dir.
+    */
+  def drain(df: DataFrame, mode: OutputMode): (DataFrame, StreamingQuery) = {
+    val s = df.sparkSession
+    val name = s"graft_stream_drain_${drainCounter.incrementAndGet()}"
+    withCheckpoint { ckpt =>
+      try {
+        val q = graft.GraftSession.withConf(s, DrainPartitions) {
+          runAvailableNow(df, name, mode, ckpt)
+        }
+        (s.table(name), q)
+      } finally s.catalog.dropTempView(name)
+    }
   }
 
   /** One stateful operator's state-store footprint in one micro-batch
@@ -287,7 +310,7 @@ object EventStream {
     * (recentProgress is retained after stop — callable on a drained
     * AvailableNow query). One row per (batch, stateful operator).
     */
-  def stateMetrics(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[StateOpMetrics] =
+  def stateMetrics(q: StreamingQuery): Seq[StateOpMetrics] =
     q.recentProgress.toSeq.flatMap { p =>
       p.stateOperators.toSeq.map { so =>
         StateOpMetrics(so.operatorName, p.batchId, so.numRowsTotal,

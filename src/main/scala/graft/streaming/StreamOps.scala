@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured Streaming surfaced through the driver contract: the op
   * below DRIVES a real streaming query (file source → watermarked
-  * tumbling aggregate → Trigger.AvailableNow → memory sink) and
+  * tumbling aggregate → AvailableNow drain → memory sink) and
   * returns its drained result, so streaming execution passes the SAME
   * DuckDB hash gate as every batch operator — not just its own
   * ScalaTest reconciliation (StreamingSpec covers the wider feature
@@ -19,8 +19,6 @@ import org.apache.spark.sql.streaming.OutputMode
   * aggregations, which is itself a documented engine semantic.
   */
 object StreamOps {
-
-  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** FileStreamSource orders files by (mtime, path); stamp each staged
     * batch's newly-written part files with an explicit increasing
@@ -70,19 +68,8 @@ object StreamOps {
     }
 
   private def streamTumbling(s: SparkSession, dir: String): DataFrame = {
-    val src = ev3Src(s, dir)
-    val name = s"graft_stream_tumbling_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val agg = tumblingFrom(s, src)
-    // bounded state (|hours|·|types| window rows) never needs the
-    // session's 32 state stores per micro-batch — scope the drain to 8
-    // (the Dedup.clustersComputed low-partition pattern; conf is read
-    // at stream START, restored after)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(agg, name, OutputMode.Complete(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(tumblingFrom(s, ev3Src(s, dir)), OutputMode.Complete())
+    rows
       .select(
         unix_timestamp(col("window.start")).as("hour_epoch"),
         col("event_type"), col("n_events"),
@@ -112,16 +99,8 @@ object StreamOps {
   }
 
   private def streamSliding(s: SparkSession, dir: String): DataFrame = {
-    val src = ev3Src(s, dir)
-    val name = s"graft_stream_sliding_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    // 4x the tumbling state rows, still grain-bounded — same 8-store
-    // drain scope as stream_tumbling
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(slidingFrom(s, src), name, OutputMode.Complete(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(slidingFrom(s, ev3Src(s, dir)), OutputMode.Complete())
+    rows
       .select(
         unix_timestamp(col("window.start")).as("win_start"),
         col("event_type"), col("n_events"),
@@ -199,14 +178,8 @@ object StreamOps {
     }
 
   private def streamTwoPhase(s: SparkSession, dir: String): DataFrame = {
-    val src = twoPhaseSrc(s, dir)
-    val name = s"graft_stream_2p_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(twoPhaseFrom(s, src), name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(twoPhaseFrom(s, twoPhaseSrc(s, dir)), OutputMode.Append())
+    rows
       .filter(col("event_type") =!= "__sentinel")
       .select(
         unix_timestamp(col("window.start")).as("hour_epoch"),
@@ -248,7 +221,7 @@ object StreamOps {
   //    3600 > gap) closes every user's trailing session; the
   //    sentinel's own 1-event session stays in state and is never
   //    emitted, so the drained sink holds exactly the real sessions.
-  //  - the staged copy is written as ONE file: Trigger.AvailableNow
+  //  - the staged copy is written as ONE file: the AvailableNow drain
   //    then processes it as one deterministic micro-batch (the
   //    sessionizer itself is in-order-safe per micro-batch; cross-
   //    batch arrival order is the source's contract — a production
@@ -269,15 +242,12 @@ object StreamOps {
     * provider that lost/duplicated state rows would move the session
     * set and fail the oracle; matching hashes prove backend-
     * independent state semantics. Provider is a session conf (no
-    * per-query override in Spark), so it is scoped set → run →
-    * restore exactly like the shuffle-partition override.
+    * per-query override in Spark), so it is scoped around the drain
+    * with GraftSession.withConf.
     */
   private def streamSessionizeRocksDb(s: SparkSession, dir: String): DataFrame =
     streamSessionizeOn(s, dir, rocksDb = true)
 
-  /** Stage + drain the sessionizer; returns the finished query (for
-    * state metrics) and the memory-sink table name.
-    */
   /** Staged sessionizer source — shared by stream_sessionize, its
     * RocksDB twin and stream_state_metrics (identical drains).
     */
@@ -297,36 +267,28 @@ object StreamOps {
         .write.mode("overwrite").parquet(p)
     }
 
+  /** Stage + drain the sessionizer; returns the drained sessions and
+    * the finished query (for state metrics).
+    */
   private[streaming] def sessionizeDrain(s: SparkSession, dir: String,
-      rocksDb: Boolean): (org.apache.spark.sql.streaming.StreamingQuery, String) = {
+      rocksDb: Boolean): (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
     import s.implicits._
     val src = sessSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_sessionize_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
     val sessions = EventStream.closedSessions(
       s.readStream.schema(schema).parquet(src).as[EventStream.Event])
-    // scope the state-partition count to the bounded drain (see
-    // stream_attribution: store init/checkpoint overhead dominates)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val priorState =
-      if (rocksDb) Some(EventStream.enableRocksDbState(s)) else None
-    val q =
-      try EventStream.runAvailableNow(sessions.toDF(), name, OutputMode.Append(), ckpt)
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        priorState.foreach(EventStream.restoreStateStoreConf(s, _))
-      }
-    (q, name)
+    val state = if (rocksDb) EventStream.RocksDbState else Nil
+    graft.GraftSession.withConf(s, state: _*) {
+      EventStream.drain(sessions.toDF(), OutputMode.Append())
+    }
   }
 
   private def streamSessionizeOn(s: SparkSession, dir: String,
       rocksDb: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (_, name) = sessionizeDrain(s, dir, rocksDb)
+    val (rows, _) = sessionizeDrain(s, dir, rocksDb)
     val w = Window.partitionBy("user_id").orderBy("session_start")
-    s.table(name)
+    rows
       .withColumn("session_no", row_number().over(w).cast("bigint"))
       .select(col("user_id"), col("session_no"), col("session_start"), col("session_end"),
         col("n_events"), (col("sum_value") / lit(100.0)).as("sum_value"))
@@ -349,7 +311,7 @@ object StreamOps {
   // ---------------------------------------------------------------
   private def streamStateMetrics(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (q, _) = sessionizeDrain(s, dir, rocksDb = false)
+    val (_, q) = sessionizeDrain(s, dir, rocksDb = false)
     val m = EventStream.stateMetrics(q)
     require(m.nonEmpty, "drained query reported no state operators")
     val b0 = m.filter(_.batchId == 0L)
@@ -408,21 +370,11 @@ object StreamOps {
   private def streamAttribution(s: SparkSession, dir: String): DataFrame = {
     val src = attrSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_attribution_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
     def stream(eventType: String): DataFrame =
       s.readStream.schema(schema).parquet(src).filter(col("event_type") === eventType)
-    val joined = EventStream.purchaseAttribution(stream("signup"), stream("purchase"))
-    // a stream-stream join materializes FOUR state stores per shuffle
-    // partition; at 32 partitions the 128 store inits + checkpoints
-    // dominate a bounded drain. 8 partitions is ample for the gate
-    // corpus; shuffle.partitions is read at stream START, so scope
-    // the override to this query and restore after.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(joined, name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(
+      EventStream.purchaseAttribution(stream("signup"), stream("purchase")), OutputMode.Append())
+    rows
       .select(col("user_id"), col("purchase_id"),
         unix_timestamp(col("purchase_ts")).as("purchase_es"),
         unix_timestamp(col("signup_ts")).as("signup_es"),
@@ -492,17 +444,13 @@ object StreamOps {
   private def streamAttributionOuter(s: SparkSession, dir: String): DataFrame = {
     val src = attrOuterSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_attro_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
     def stream(eventType: String): DataFrame =
       s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
         .filter(col("event_type") === eventType)
-    val joined = EventStream.purchaseAttributionOuter(stream("signup"), stream("purchase"))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(joined, name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(
+      EventStream.purchaseAttributionOuter(stream("signup"), stream("purchase")),
+      OutputMode.Append())
+    rows
       .filter(col("user_id") =!= -999L)
       .select(col("user_id"), col("purchase_id"),
         unix_timestamp(col("purchase_ts")).as("purchase_es"),
@@ -557,14 +505,9 @@ object StreamOps {
   private def streamDedup(s: SparkSession, dir: String): DataFrame = {
     val src = dedupSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_dedup_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val deduped = EventStream.dedupedEvents(s.readStream.schema(schema).parquet(src))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(deduped, name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(
+      EventStream.dedupedEvents(s.readStream.schema(schema).parquet(src)), OutputMode.Append())
+    rows
       .select(col("event_id"), unix_timestamp(col("ts")).as("es"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy("event_id")
@@ -598,15 +541,10 @@ object StreamOps {
   private def streamHll(s: SparkSession, dir: String): DataFrame = {
     val src = hllSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_hll_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val reg = graft.queries.EventOps.hllRegisters(
-      s.readStream.schema(schema).parquet(src))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(reg, name, OutputMode.Complete(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    graft.queries.EventOps.hllFinalize(s.table(name), Tables.events(s, dir))
+    val (reg, _) = EventStream.drain(
+      graft.queries.EventOps.hllRegisters(s.readStream.schema(schema).parquet(src)),
+      OutputMode.Complete())
+    graft.queries.EventOps.hllFinalize(reg, Tables.events(s, dir))
   }
 
   // ---------------------------------------------------------------
@@ -631,15 +569,10 @@ object StreamOps {
   private def streamF2(s: SparkSession, dir: String): DataFrame = {
     val src = f2Src(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_f2_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val z = graft.queries.EventOps3.f2Counters(
-      s.readStream.schema(schema).parquet(src))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(z, name, OutputMode.Complete(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    graft.queries.EventOps3.f2Finalize(s.table(name),
+    val (z, _) = EventStream.drain(
+      graft.queries.EventOps3.f2Counters(s.readStream.schema(schema).parquet(src)),
+      OutputMode.Complete())
+    graft.queries.EventOps3.f2Finalize(z,
       Tables.events(s, dir).select(col("event_type"), col("user_id")))
   }
 
@@ -687,20 +620,15 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     val src = sessionWindowSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_sw_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
     val agg = s.readStream.schema(schema).parquet(src)
       .withWatermark("ts", "10 seconds")
       .groupBy(session_window(col("ts"), "1800 seconds"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         max(col("ts")).as("max_ts"),
         sum(col("value").cast("decimal(18,2)")).as("sum_dec"))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(agg, name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val (rows, _) = EventStream.drain(agg, OutputMode.Append())
     val w = Window.partitionBy("user_id").orderBy("session_start")
-    s.table(name)
+    rows
       .filter(col("user_id") >= 0)
       .withColumn("session_start", unix_timestamp(col("session_window.start")))
       .withColumn("session_no", row_number().over(w).cast("bigint"))
@@ -738,18 +666,13 @@ object StreamOps {
     val src = evFullSrc(s, dir)
     val schema = s.read.parquet(src).schema
     val out = graft.sources.SourceOps.tmpDir("graft_stream_fsink_out")
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    def drain(): Unit = {
-      val q = s.readStream.schema(schema).parquet(src)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    EventStream.withCheckpoint { ckpt =>
+      def run() = EventStream.awaitAvailableNow(
+        s.readStream.schema(schema).parquet(src).writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt))
+      run()
+      run() // restart against the same checkpoint: must be a no-op
     }
-    drain()
-    drain() // restart against the same checkpoint: must be a no-op
     s.read.parquet(out)
       .select(col("event_id"), unix_timestamp(col("ts")).as("es"),
         col("user_id"), col("event_type"), col("value"))
@@ -792,7 +715,6 @@ object StreamOps {
     val src = upsertSrc(s, dir)
     val schema = s.read.parquet(src).schema
     val target = graft.sources.SourceOps.tmpDir("graft_stream_upsert_tgt")
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
     // versions are keyed on the MICRO-BATCH ID, not a local counter:
     // foreachBatch re-executes a batch after a mid-stream failure,
     // and a replay of batch N must re-derive v(N+1) from the same
@@ -803,7 +725,7 @@ object StreamOps {
     def agg(df: DataFrame): DataFrame =
       df.groupBy("user_id")
         .agg(sum(col("n_events")).as("n_events"), max(col("last")).as("last"))
-    val q = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    val writer = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val batchAgg = batch.select(col("user_id"), lit(1L).as("n_events"),
@@ -817,18 +739,17 @@ object StreamOps {
         lastVer.set(batchId + 1)
         ()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
     // the four foreachBatch merges each shuffle a |users|-sized
     // aggregate — 8 partitions, not the session's 32 (no stream
     // state here, but the per-merge shuffle constants are the same
-    // bill). stream_file_sink and stream_enrich stay unscoped: both
-    // are stateless with no shuffle (pass-through sink / broadcast
-    // join), so the override would have nothing to act on.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try q.start().awaitTermination()
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // bill). stream_file_sink stays unscoped: it is stateless with no
+    // shuffle (pass-through sink), so the override would have nothing
+    // to act on.
+    EventStream.withCheckpoint { ckpt =>
+      graft.GraftSession.withConf(s, EventStream.DrainPartitions) {
+        EventStream.awaitAvailableNow(writer.option("checkpointLocation", ckpt))
+      }
+    }
     require(lastVer.get() >= 4, s"expected >=4 merge batches, saw ${lastVer.get()}")
     s.read.parquet(s"$target/v${lastVer.get()}")
       .select(col("user_id"), col("n_events"),
@@ -865,12 +786,10 @@ object StreamOps {
     val dim = Tables.load(s, dir, "customer")
       .select(col("c_custkey").as("user_id"),
         col("c_mktsegment").as("segment"), col("c_nationkey"))
-    val name = s"graft_stream_enrich_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val joined = s.readStream.schema(schema).parquet(src)
-      .join(broadcast(dim), Seq("user_id"), "left")
-    EventStream.runAvailableNow(joined, name, OutputMode.Append(), ckpt)
-    s.table(name)
+    val (rows, _) = EventStream.drain(
+      s.readStream.schema(schema).parquet(src).join(broadcast(dim), Seq("user_id"), "left"),
+      OutputMode.Append())
+    rows
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         coalesce(col("segment"), lit("UNKNOWN")).as("segment"),
         coalesce(col("c_nationkey"), lit(-1L)).as("nation_key"))
@@ -932,18 +851,13 @@ object StreamOps {
   private def streamWatermarkLate(s: SparkSession, dir: String): DataFrame = {
     val src = lateSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_late_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
     val agg = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).as("sum_dec"))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(agg, name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(agg, OutputMode.Append())
+    rows
       .filter(col("event_type") =!= "sentinel")
       .select(unix_timestamp(col("window.start")).as("hour_epoch"),
         col("event_type"), col("n_events"),
@@ -984,15 +898,10 @@ object StreamOps {
     import s.implicits._
     val src = velocitySrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_velocity_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val peaks = EventStream.peakVelocity(
-      s.readStream.schema(schema).parquet(src).as[EventStream.Event])
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(peaks.toDF(), name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name)
+    val (rows, _) = EventStream.drain(
+      EventStream.peakVelocity(s.readStream.schema(schema).parquet(src).as[EventStream.Event]).toDF(),
+      OutputMode.Append())
+    rows
       .select(col("user_id"), col("peak_burst"))
       .orderBy("user_id")
   }

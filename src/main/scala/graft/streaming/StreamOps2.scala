@@ -22,8 +22,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps2 {
 
-  private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
   // sized to the gate corpora with headroom (sf0.1 busiest hour: 166
   // distinct users; the 10× scale corpus: 1660 — the exactness guard
   // in guardedHeavyHitters turns an undersized capacity into a loud
@@ -147,14 +145,10 @@ object StreamOps2 {
     import s.implicits._
     val src = hhSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_hh_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val out = heavyHitters(s.readStream.schema(schema).parquet(src).as[HourRow], capacity)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try EventStream.runAvailableNow(out.toDF(), name, OutputMode.Append(), ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    s.table(name).orderBy("hour_epoch", "rk")
+    val (rows, _) = EventStream.drain(
+      heavyHitters(s.readStream.schema(schema).parquet(src).as[HourRow], capacity).toDF(),
+      OutputMode.Append())
+    rows.orderBy("hour_epoch", "rk")
   }
 
   /** The registered gate = pipeline + exact-gate precondition,
@@ -278,19 +272,13 @@ object StreamOps2 {
     import s.implicits._
     val src = kmvSrc(s, dir)
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_kmv_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val out = kmvSketch(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src).as[KmvRow])
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try EventStream.runAvailableNow(out.toDF(), name, OutputMode.Append(), ckpt)
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val (rows, q) = EventStream.drain(kmvSketch(
+      s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src).as[KmvRow]).toDF(),
+      OutputMode.Append())
     val fedBatches = q.recentProgress.count(_.numInputRows > 0)
     require(fedBatches >= 5,
       s"stream_kmv: expected >=5 non-empty micro-batches (4 data + sentinel), saw $fedBatches")
-    s.table(name).orderBy("t")
+    rows.orderBy("t")
   }
 
   private val streamKmvSql =
@@ -410,22 +398,15 @@ object StreamOps2 {
         expr("CAST(conv(substr(md5(CAST(event_id AS STRING)), 1, 13), 16, 10) AS BIGINT)").as("h"),
         expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("c"))
     val schema = s.read.parquet(src).schema
-    val name = s"graft_stream_quant_${runCounter.incrementAndGet()}"
-    val ckpt = graft.sources.SourceOps.tmpDir("graft_stream_ckpt")
-    val out = quantSketch(
-      s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src).as[QRow])
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try EventStream.runAvailableNow(out.toDF(), name, OutputMode.Append(), ckpt)
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val (est, q) = EventStream.drain(quantSketch(
+      s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src).as[QRow]).toDF(),
+      OutputMode.Append())
     val fedBatches = q.recentProgress.count(_.numInputRows > 0)
     require(fedBatches >= 5,
       s"stream_quantile: expected >=5 non-empty micro-batches, saw $fedBatches")
     // batch-side audit: exact (c, h)-lexicographic rank of each pick
     // vs the decile's target rank over the full corpus
     val n = v.groupBy("t").agg(count(lit(1)).as("n_total"))
-    val est = s.table(name)
     // aliased copies → fresh attribute ids, so joining `est` against
     // an aggregate DERIVED from est below doesn't self-conflict
     val picks = est.select(col("event_type").as("pt"), col("decile").as("pd"),

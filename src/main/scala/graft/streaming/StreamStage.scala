@@ -20,9 +20,10 @@ import org.apache.spark.sql.SparkSession
   * and evicts the superseded dir; a staged path reaped from /tmp
   * re-stages instead of poisoning the JVM; a non-local dir (no usable
   * snapshot) skips the memo and stages fresh — correct, never stale.
-  * Drains stay per-op: each streaming query still gets its own fresh
-  * checkpoint + memory-sink table, so FileStreamSource re-reads the
-  * shared dir's files in the same (mtime, path) order every time.
+  * Drains stay per-op: every query starts from a fresh checkpoint
+  * (EventStream.drain / withCheckpoint, which delete it once the query
+  * has terminated), so FileStreamSource re-reads the shared dir's
+  * files in the same (mtime, path) order every time.
   *
   * Billing discipline (the resetPairStage rule): Bench resets this
   * memo between its warmup and timed phases and rebuilds every shape

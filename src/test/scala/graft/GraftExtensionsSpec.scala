@@ -38,18 +38,11 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuite {
     val withRule = vectors.withColumn("d", expr(hofDot)).select("vec_id", "d")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val ruleName = graft.plans.NativeDotProductRule.ruleName
-    val prev = spark.conf.getOption("spark.sql.optimizer.excludedRules")
-    spark.conf.set("spark.sql.optimizer.excludedRules", ruleName)
-    try {
+    GraftSession.withConf(spark, "spark.sql.optimizer.excludedRules" -> ruleName) {
       val withoutRuleDf = vectors.withColumn("d", expr(hofDot)).select("vec_id", "d")
       assert(!withoutRuleDf.queryExecution.optimizedPlan.toString.contains("graft_array_dot"))
       val withoutRule = withoutRuleDf.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(withoutRule == withRule) // exact double equality, bit for bit
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.optimizer.excludedRules", v)
-        case None => spark.conf.unset("spark.sql.optimizer.excludedRules")
-      }
     }
   }
 }

@@ -15,9 +15,7 @@ class R9PlanShapeSpec extends AnyFunSuite with SparkSuite {
 
   test("graph_pagerank: edge/outdeg scans are bucketed and NEVER re-exchanged") {
     // simulate cluster scale: no broadcast shortcut for the skinny side
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = plan("graph_pagerank")
       val bucketedScans = p.linesIterator.count(l =>
         l.contains("FileScan parquet") && l.contains("Bucketed: true"))
@@ -36,7 +34,7 @@ class R9PlanShapeSpec extends AnyFunSuite with SparkSuite {
           assert(!lines(i + 1).contains("FileScan"),
             s"an exchange sits directly on a staged scan (edge re-shuffle):\n$p")
       }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("bucket count is not below the session shuffle parallelism (the EnsureRequirements losing-side rule)") {

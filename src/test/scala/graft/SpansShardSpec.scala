@@ -14,27 +14,17 @@ class SpansShardSpec extends AnyFunSuite with SparkSuite {
     Registry.byName(name).run(spark, sfDir).collect()
       .map(_.toSeq).toSeq.sortBy(_.mkString("|"))
 
-  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   for (op <- Seq("dedup_spans", "dedup_substring")) {
     test(s"$op: 4-shard union run equals the unsharded run") {
       val base = rows(op)
       assert(base.nonEmpty)
-      val sharded = withConf("spark.graft.spans.shards" -> "4")(rows(op))
+      val sharded = GraftSession.withConf(spark, "spark.graft.spans.shards" -> "4")(rows(op))
       assert(sharded == base)
     }
 
     test(s"$op: 3-shard sequentially-staged run equals the unsharded run") {
       val base = rows(op)
-      val staged = withConf(
+      val staged = GraftSession.withConf(spark,
         "spark.graft.spans.shards" -> "3",
         "spark.graft.spans.shardStage" -> "true")(rows(op))
       assert(staged == base)

@@ -26,8 +26,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("RocksDB state store + AvailableNow: stateful agg matches batch, resumes exactly-once") {
     val schema = spark.read.parquet(eventsDir).schema
     val ckpt = Files.createTempDirectory("graft_rocksdb_ckpt").toString
-    val priorState = EventStream.enableRocksDbState(spark)
-    try {
+    GraftSession.withConf(spark, EventStream.RocksDbState: _*) {
       val stream = spark.readStream.schema(schema).parquet(eventsDir)
       EventStream.runAvailableNow(
         EventStream.tumblingCounts(stream), "rocksdb_test", OutputMode.Complete(), ckpt)
@@ -47,7 +46,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       EventStream.runAvailableNow(
         EventStream.tumblingCounts(again), "rocksdb_test2", OutputMode.Complete(), ckpt)
       assert(spark.table("rocksdb_test2").count() == 0)
-    } finally EventStream.restoreStateStoreConf(spark, priorState)
+    }
   }
 
   test("stream_f2: AMS counters ADD across micro-batches into bounded state") {
@@ -145,8 +144,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("state-store instrumentation: sessionizer state stays bounded by live users") {
     val schema = spark.read.parquet(eventsDir).schema
-    val priorState = EventStream.enableRocksDbState(spark)
-    try {
+    GraftSession.withConf(spark, EventStream.RocksDbState: _*) {
       // multi-file source (time-ordered files) + single-file trigger so
       // state evolves across several micro-batches
       val multiDir = Files.createTempDirectory("graft_stream_multi").toString
@@ -171,7 +169,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
         s"sessionizer state $peak exceeds user population $users")
       // RocksDB reports resident state bytes — the instrumentation is live
       assert(m.exists(_.memoryBytes > 0))
-    } finally EventStream.restoreStateStoreConf(spark, priorState)
+    }
   }
 
   test("watermarked stream dedup collapses replayed events exactly") {
