@@ -114,7 +114,7 @@ object Bench {
     // core count AND the parallelism the context actually granted, so
     // a scaling capture proves $SPARK_GRAFT_CPUS took effect instead
     // of asserting it
-    val par = s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism}"""
+    val par = parallelismJson(cpus, spark.sparkContext.defaultParallelism)
     val full =
       s"""{"metric":"$metricName","value":$total,"unit":"sec",$par,"queries":$qs,"staging":$st,"ops_total":$opsTotal,"staging_total":$stagingTotal,"passes":$passes,"staging_passes":$stagingPassesOut,"staging_mode":"$stagingMode","errors":$errors,"sf":"$sfDir"}"""
     println(full)
@@ -137,5 +137,15 @@ object Bench {
     println(s"""{"metric":"$metricName","value":$total,"unit":"sec",$par,"queries":$famTotals,"staging_total":$stagingTotal,"staging_passes":$stagingPassesOut,"n_queries":${results.size},"passes":$passes,"errors":$errors,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
     if (results.exists(_._2 < 0)) { spark.stop(); sys.exit(1) }
     spark.stop()
+  }
+
+  /** The `"cpus":…,"default_parallelism":…` JSON fields. An integer
+    * core count stays a JSON number; any other master spec
+    * `$SPARK_GRAFT_CPUS` may hold (`*`, `4,2`) becomes a JSON string,
+    * so the line always parses.
+    */
+  private[graft] def parallelismJson(cpus: String, defaultParallelism: Int): String = {
+    val v = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else "\"" + cpus + "\""
+    s""""cpus":$v,"default_parallelism":$defaultParallelism"""
   }
 }

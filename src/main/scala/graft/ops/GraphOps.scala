@@ -366,30 +366,27 @@ object GraphOps {
               .select(col("v"), col("mass"), col("prev"), lit(2).as("rnd"))
               .unionByName(
                 s1.select(col("v"), col("mass"), col("prev"), lit(1).as("rnd"))))
-          val row =
-            try next.agg(
-              max(when(col("rnd") === 1, abs(col("mass") - col("prev")))),
-              max(when(col("rnd") === 2, abs(col("mass") - col("prev"))))).head()
+          val (r1, r2) =
+            try pairResiduals(next)
             catch { case e: Throwable =>
               Rounds.freeQuietly(next, ids)
               Rounds.freeQuietly(s1, s1Ids)
               throw e
             }
-          val r1 = row.getLong(0)
-          val r2 = row.getLong(1)
           Rounds.free(mass, massIds)
           Rounds.free(s1, s1Ids) // next is materialized; round a's blocks are superseded
           massIds = ids
           rounds += 1
           curve :+= ((rounds.toLong, r1))
           residual = r1
-          if (r1 > PrTolPpm) {
-            rounds += 1
-            curve :+= ((rounds.toLong, r2))
-            residual = r2
-            mass = next.filter(col("rnd") === 2).select(col("v"), col("mass"))
-          } else {
-            mass = next.filter(col("rnd") === 1).select(col("v"), col("mass"))
+          r2 match {
+            case Some(rb) if r1 > PrTolPpm =>
+              rounds += 1
+              curve :+= ((rounds.toLong, rb))
+              residual = rb
+              mass = next.filter(col("rnd") === 2).select(col("v"), col("mass"))
+            case _ =>
+              mass = next.filter(col("rnd") === 1).select(col("v"), col("mass"))
           }
         }
       }
@@ -406,6 +403,17 @@ object GraphOps {
         throw e
     }
     (mass, massIds, curve)
+  }
+
+  /** The fused pair's residuals in ONE action over its tagged union:
+    * round a's, and round b's unless round b has no rows — its max is
+    * then NULL, and the pair keeps round a's result.
+    */
+  private[graft] def pairResiduals(pair: DataFrame): (Long, Option[Long]) = {
+    val row = pair.agg(
+      max(when(col("rnd") === 1, abs(col("mass") - col("prev")))),
+      max(when(col("rnd") === 2, abs(col("mass") - col("prev"))))).head()
+    (row.getLong(0), if (row.isNullAt(1)) None else Some(row.getLong(1)))
   }
 
   private def pagerankConverged(s: SparkSession, dir: String): DataFrame = {

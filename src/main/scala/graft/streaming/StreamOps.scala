@@ -666,7 +666,7 @@ object StreamOps {
     val src = evFullSrc(s, dir)
     val schema = s.read.parquet(src).schema
     val out = graft.sources.SourceOps.tmpDir("graft_stream_fsink_out")
-    EventStream.withCheckpoint { ckpt =>
+    EventStream.withCheckpoint(s) { ckpt =>
       def run() = EventStream.awaitAvailableNow(
         s.readStream.schema(schema).parquet(src).writeStream.format("parquet")
           .option("path", out).option("checkpointLocation", ckpt))
@@ -742,10 +742,11 @@ object StreamOps {
     // the four foreachBatch merges each shuffle a |users|-sized
     // aggregate — 8 partitions, not the session's 32 (no stream
     // state here, but the per-merge shuffle constants are the same
-    // bill). stream_file_sink stays unscoped: it is stateless with no
-    // shuffle (pass-through sink), so the override would have nothing
+    // bill). stream_file_sink takes only withCheckpoint's manager
+    // scope, not DrainPartitions: it is stateless with no shuffle
+    // (pass-through sink), so a partition override would have nothing
     // to act on.
-    EventStream.withCheckpoint { ckpt =>
+    EventStream.withCheckpoint(s) { ckpt =>
       graft.GraftSession.withConf(s, EventStream.DrainPartitions) {
         EventStream.awaitAvailableNow(writer.option("checkpointLocation", ckpt))
       }

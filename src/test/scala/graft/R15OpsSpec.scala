@@ -23,6 +23,15 @@ class R15OpsSpec extends AnyFunSuite with SparkSuite {
     assert(nRounds == curve.size.toLong)
   }
 
+  test("pagerank fused pair: an empty round b reads as None and keeps round a's residual") {
+    import spark.implicits._
+    val tagged = Seq((1L, 150000L, 100000L, 1), (2L, 170000L, 100000L, 1))
+      .toDF("v", "mass", "prev", "rnd")
+    assert(graft.ops.GraphOps.pairResiduals(tagged) == ((70000L, None)))
+    val both = tagged.unionByName(Seq((1L, 150500L, 150000L, 2)).toDF("v", "mass", "prev", "rnd"))
+    assert(graft.ops.GraphOps.pairResiduals(both) == ((70000L, Some(500L))))
+  }
+
   test("dedup_cdc_chunks: pair invariants (Jaccard >= 0.5, ordered cross-class keys)") {
     val rows = run("dedup_cdc_chunks").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
