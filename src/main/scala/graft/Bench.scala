@@ -64,10 +64,8 @@ object Bench {
     val stagingRuns: Seq[Seq[(String, Double)]] =
       if (skipStaging) Seq(Seq.empty)
       else (1 to stagingPasses).map { _ =>
-        graft.ops.Dedup.resetPairStage()
-        graft.streaming.StreamStage.reset()
-        graft.ops.Dedup.stageAllTimed(spark, sfDir) ++
-          graft.streaming.StreamStage.stageAllTimed(spark, sfDir)
+        graft.ops.Staging.reset()
+        graft.ops.Staging.stageAllTimed(spark, sfDir)
       }
     val staging: Seq[(String, Double)] = stagingRuns.head.map(_._1).map { k =>
       k -> stagingRuns.map(_.collectFirst { case (`k`, v) => v }.get).min

@@ -100,45 +100,13 @@ object Dedup {
     * cap): whether any shingle exceeds the cap is per-corpus METADATA
     * (an ANALYZE-style statistic), so the registered ops compute it
     * once per JVM per corpus snapshot. The key embeds
-    * [[corpusSnapshot]] (file names + sizes + mtimes), so an
+    * [[Staging.snapshot]] (file names + sizes + mtimes), so an
     * in-process rewrite of the table invalidates the memo instead of
-    * leaving a stale prune decision behind.
+    * leaving a stale prune decision behind. It is not a staged
+    * artifact and survives [[Staging.reset]].
     */
   private val hotStatsMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-
-  /** Content-version marker for the documents table under `dir`: the
-    * md5 of the file listing (relative path, size, mtime). Driver-side
-    * local-FS metadata only — the same listing a parquet scan's file
-    * index performs, never a data read. Returns None when `dir` is
-    * NOT a local filesystem path (hdfs://, s3a://, …): java.nio can't
-    * see those, and hashing a constant would serve a stale staged
-    * result forever after any table rewrite — callers must skip
-    * memoization instead (a genuinely absent local table also returns
-    * None; the consumer's own parquet read fails loudly on it).
-    */
-  private[graft] def corpusSnapshot(dir: String, table: String = "documents"): Option[String] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val scheme = java.net.URI.create(dir.replace(" ", "%20")).getScheme
-    if (scheme != null && scheme != "file") return None
-    val root = Paths.get(dir.stripPrefix("file:"), s"$table.parquet")
-    val entries =
-      if (!Files.exists(root)) return None
-      else if (Files.isRegularFile(root))
-        Seq(s"${root.getFileName}:${Files.size(root)}:${Files.getLastModifiedTime(root).toMillis}")
-      else {
-        val walk = Files.walk(root)
-        try
-          walk.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
-            s"${root.relativize(p)}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
-            .toSeq.sorted
-        finally walk.close()
-      }
-    Some(java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.mkString("\n").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString)
-  }
 
   // ---------------------------------------------------------------
   // Staged pair graph — the near-dup candidate pair set is the
@@ -146,52 +114,19 @@ object Dedup {
   // dedup_clusters AND dedup_corpus_pipeline. Nobody recomputes a
   // corpus-wide pair graph four times at 100 TB: it is staged ONCE
   // per corpus snapshot (shingling → df-capped postings self-join →
-  // threshold-union filter → parquet) and every consumer reads the
-  // staged result back — the same pattern as the reference's staging
-  // zone (extract once, consume many). The staged set carries RAW
-  // stats (doc_a, doc_b, na, nb, inter) for every pair passing ANY
-  // consumer threshold (symmetric J ≥ 0.5 OR directional containment
-  // ≥ 0.8 with ≥ MinContainShingles) — the superset stays
+  // threshold-union filter → parquet) in the [[Staging]] memo and
+  // every consumer reads the staged result back — the reference's
+  // staging zone (extract once, consume many). The staged set carries
+  // RAW stats (doc_a, doc_b, na, nb, inter) for every pair passing
+  // ANY consumer threshold (symmetric J ≥ 0.5 OR directional
+  // containment ≥ 0.8 with ≥ MinContainShingles) — the superset stays
   // near-dup-sized (never the full co-shingle pair multiset), and
   // each consumer filters its own predicate from it. Registered ops
-  // stage into managed temp space; production points
-  // [[stagePairGraph]] at a ZoneConfig staging path.
-  //
-  // Staging happens at FIRST ACTION over the corpus (plan
-  // construction is lazy about it only to the extent the memo hit
-  // is); Bench resets the memo between warmup and timed phases via
-  // [[resetPairStage]] so the first timed consumer pays the full
-  // staging cost — reuse across consumers must cost once per run,
-  // not zero times.
+  // stage into managed temp space; production would stage into a
+  // ZoneConfig staging path. The cluster labels, band index,
+  // embedding pairs and IVF cells below are staged the same way,
+  // each for the consumers named on it.
   // ---------------------------------------------------------------
-  /** snapshot-key → staged parquet dir. */
-  private val pairStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  /** corpus dir → its CURRENT snapshot key, for evicting superseded
-    * stage dirs when an in-process rewrite changes the snapshot.
-    */
-  private val pairStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  /** Same pair of maps for the staged CC cluster labels. */
-  private val labelStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  private val labelStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  /** Same pair of maps for the staged MinHash band index. */
-  private val bandStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  private val bandStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  /** Same pair of maps for the staged embedding near-dup pairs. */
-  private val embStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  private val embStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-  /** Same pair of maps for the staged IVF cell assignments. */
-  private val cellStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  private val cellStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
   private[graft] def deleteDirQuietly(path: String): Unit = {
     import java.nio.file.{Files, Paths}
@@ -205,92 +140,10 @@ object Dedup {
     }
   }
 
-  /** Drop every staged pair graph and its backing dir. The next
-    * consumer re-stages from scratch — Bench calls this between its
-    * warmup and timed phases so staging cost lands in exactly one
-    * timed consumer (hot-shingle STATISTICS stay memoized: they are
-    * per-corpus metadata, not op output).
+  /** Free every staged artifact ([[Staging.reset]]); kept by name for
+    * callers that reset the corpus stages.
     */
-  def resetPairStage(): Unit = {
-    import scala.jdk.CollectionConverters._
-    pairStageMemo.values.asScala.foreach(deleteDirQuietly)
-    pairStageMemo.clear()
-    pairStageLatest.clear()
-    labelStageMemo.values.asScala.foreach(deleteDirQuietly)
-    labelStageMemo.clear()
-    labelStageLatest.clear()
-    bandStageMemo.values.asScala.foreach(deleteDirQuietly)
-    bandStageMemo.clear()
-    bandStageLatest.clear()
-    embStageMemo.values.asScala.foreach(deleteDirQuietly)
-    embStageMemo.clear()
-    embStageLatest.clear()
-    cellStageMemo.values.asScala.foreach(deleteDirQuietly)
-    cellStageMemo.clear()
-    cellStageLatest.clear()
-    Similarity.resetKnnStage(deleteDirQuietly)
-    Spans.resetShardStage()
-    Paragraphs.resetCanonStage()
-    // the active session (Bench, specs) lets the graph stage DROP its
-    // catalog tables before their backing dirs go away
-    GraphOps.resetStage(org.apache.spark.sql.SparkSession.getActiveSession)
-  }
-
-  /** Build every snapshot-staged corpus artifact in dependency order
-    * (cells before their two consumers, pairs before labels), timing
-    * each build separately — Bench's explicit staging phase. Billing
-    * each artifact on its own line instead of inside whichever timed
-    * consumer happens to run first is what makes per-op bench numbers
-    * comparable across runs: the dominant cross-round noise in rounds
-    * 5–6 was staging-bill reattribution, not plan changes. The
-    * count() forces the staged parquet to be written AND read back,
-    * so a consumer's timed run starts from exactly the state a warm
-    * production index gives it.
-    */
-  private[graft] def stageAllTimed(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(df: => DataFrame): (String, Double) = {
-      val t0 = System.nanoTime()
-      df.count()
-      name -> ((System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      timed("ivf_cells") { stagedCellAssignments(s, dir) },
-      timed("emb_pairs") { embeddingNearDupPairs(s, dir) },
-      timed("knn_graph") { Similarity.knnGraphStaged(s, dir) },
-      timed("pair_graph") { stagedCandidateStats(s, dir) },
-      timed("band_index") { bandIndex(s, dir) },
-      timed("cluster_labels") { clusterLabels(s, dir) },
-      timed("cdc_canon") { Paragraphs.stagedCanon(s, dir) },
-      timed("purchase_graph") { GraphOps.purchaseGraph(s, dir)._1 },
-      // the converged-PageRank fixpoint (consumes purchase_graph,
-      // serves graph_pagerank_converged + graph_pagerank_residuals)
-      timed("pr_fixpoint") { GraphOps.prFixpoint(s, dir)._1 })
-  }
-
-  /** Plans that execute INSIDE staging and are therefore invisible to
-    * a registered op's own queryExecution (the op reads the staged
-    * parquet back) — exposed so PlanGuardSpec runs the registry-wide
-    * cartesian/window guards over the real staging subplan too,
-    * keeping its coverage honest after the staging split.
-    */
-  private[graft] def stagingPlans(s: SparkSession, dir: String): Seq[(String, DataFrame)] =
-    Seq(
-      "dedup_pair_stage(unstaged)" ->
-        candidatePairStats(Tables.load(s, dir, "documents"), MaxShingleDf),
-      "dedup_band_stage(unstaged)" -> bandsOf(minhashBase(s, dir)),
-      "dedup_emb_pair_stage(unstaged)" ->
-        embeddingPairsIvf(Tables.load(s, dir, "embeddings"), EmbTau),
-      "dedup_cell_stage(unstaged)" ->
-        ivfCellAssignments(Tables.load(s, dir, "embeddings")),
-      // constructing this plan RUNS the CC loop (it is iterative);
-      // the guarded plan is the final labels+sizes join it returns
-      "dedup_label_stage(unstaged)" -> clustersComputed(s, dir),
-      "dedup_cdc_canon_stage(unstaged)" -> Paragraphs.canonPlan(s, dir),
-      "sim_knn_graph_stage(unstaged)" -> Similarity.knnGraphUnsorted(s, dir),
-      "graph_edge_stage(unstaged)" -> GraphOps.purchaseGraphEdgesPlan(s, dir),
-      // constructing this RUNS the fixpoint loop (iterative, like the
-      // CC labels above); the guarded plan is the final mass relation
-      "graph_pr_fixpoint(unstaged)" -> GraphOps.prFixpoint(s, dir)._1)
+  def resetPairStage(): Unit = Staging.reset()
 
   /** Candidate pair stats passing ANY consumer threshold — what the
     * stage persists (see header above).
@@ -304,72 +157,16 @@ object Dedup {
         (col("inter") * ContainDen >= col("nb") * ContainNum &&
           col("nb") >= MinContainShingles))
 
-  /** Compute the near-dup candidate pair graph for `docs` and
-    * persist it to `path` (parquet); returns a reader over the
-    * staged set. Staged schema: (doc_a, doc_b, na, nb, inter).
-    */
-  def stagePairGraph(docs: DataFrame, path: String, maxDf: Long = MaxShingleDf,
-      memoKey: Option[(String, Long)] = None): DataFrame = {
-    candidatePairStats(docs, maxDf, memoKey)
-      .write.mode("overwrite").parquet(path)
-    docs.sparkSession.read.parquet(path)
-  }
-
-  /** Generic once-per-JVM-per-corpus-snapshot staged intermediate
-    * (keyed like [[hotStatsMemo]], so a rewritten table re-stages
-    * instead of serving stale data, and the superseded stage dir is
-    * deleted). A staged path reaped from /tmp behind our back
-    * re-stages instead of failing; a non-local `dir` (no usable
-    * snapshot) skips staging entirely and computes `inlinePlan` —
-    * correct, never stale.
-    */
-  private[ops] def stagedBySnapshot(s: SparkSession, dir: String,
-      memo: java.util.concurrent.ConcurrentHashMap[(String, Long), String],
-      latest: java.util.concurrent.ConcurrentHashMap[String, (String, Long)],
-      tmpPrefix: String, what: String,
-      inlinePlan: => DataFrame,
-      stage: ((String, Long), String) => Unit,
-      table: String = "documents"): DataFrame =
-    corpusSnapshot(dir, table) match {
-      case None =>
-        log.warn(s"$what staging skipped for $dir (not a readable " +
-          s"local path; no snapshot => no safe memo) — computing $what inline")
-        inlinePlan
-      case Some(snapHash) =>
-        val key = (s"$dir@$snapHash", MaxShingleDf)
-        // a memoized path whose dir vanished (e.g. /tmp reaped) must
-        // re-stage, not poison every dedup op until JVM restart
-        Option(memo.get(key))
-          .filterNot(p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p)))
-          .foreach { gone =>
-            log.warn(s"staged $what at $gone no longer exists; re-staging")
-            memo.remove(key, gone)
-          }
-        val path = memo.computeIfAbsent(key, _ => {
-          val prev = latest.put(dir, key)
-          Option(prev).filter(_ != key).foreach { old =>
-            Option(memo.remove(old)).foreach { oldPath =>
-              log.info(s"evicting superseded $what stage $oldPath")
-              deleteDirQuietly(oldPath)
-            }
-          }
-          val p = graft.sources.SourceOps.tmpDir(tmpPrefix)
-          log.info(s"staging $what for $dir -> $p")
-          stage(key, p)
-          p
-        })
-        s.read.parquet(path)
-    }
+  // the hot-shingle statistic rides the snapshot key (hotStatsMemo)
+  private[graft] val PairGraph = new Staging.Parquet("pair_graph", "documents")((s, dir) =>
+    candidatePairStats(Tables.load(s, dir, "documents"), MaxShingleDf,
+      Staging.snapshot(dir, "documents").map(h => (s"$dir@$h", MaxShingleDf))))
 
   /** Staged candidate pair stats for the corpus under `dir`
     * (doc_a, doc_b, na, nb, inter — threshold-union superset).
     */
   private[graft] def stagedCandidateStats(s: SparkSession, dir: String): DataFrame =
-    stagedBySnapshot(s, dir, pairStageMemo, pairStageLatest,
-      "graft_pair_graph", "near-dup pair graph",
-      candidatePairStats(Tables.load(s, dir, "documents"), MaxShingleDf),
-      (key, p) => stagePairGraph(Tables.load(s, dir, "documents"), p,
-        MaxShingleDf, memoKey = Some(key)))
+    PairGraph(s, dir)
 
   /** Staged J ≥ 0.5 pair graph (the dedup_ngram_jaccard contract:
     * doc_a, doc_b, inter, uni) — a filter over the staged stats.
@@ -386,13 +183,14 @@ object Dedup {
     * fixpoint, and the iterative label propagation is the expensive
     * part once pairs are staged, so nobody runs it three times per
     * corpus snapshot either. Derived FROM the staged pairs (one
-    * lineage: pairs stage → labels stage → consumers).
+    * lineage: pairs stage → labels stage → consumers); constructing
+    * the plan RUNS the CC loop.
     */
+  private[graft] val ClusterLabels =
+    new Staging.Parquet("cluster_labels", "documents")(clustersComputed)
+
   private[graft] def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    stagedBySnapshot(s, dir, labelStageMemo, labelStageLatest,
-      "graft_cluster_labels", "near-dup cluster labels",
-      clustersComputed(s, dir),
-      (_, p) => clustersComputed(s, dir).write.mode("overwrite").parquet(p))
+    ClusterLabels(s, dir)
 
   /** Staged MinHash band index (doc_id, band, sig) — the corpus-side
     * artifact dedup_minhash_lsh (self-join) and dedup_incremental
@@ -400,11 +198,10 @@ object Dedup {
     * index: appended per ingest batch, never recomputed corpus-wide —
     * the staging here gives the single-snapshot equivalent.
     */
-  private[ops] def bandIndex(s: SparkSession, dir: String): DataFrame =
-    stagedBySnapshot(s, dir, bandStageMemo, bandStageLatest,
-      "graft_band_index", "minhash band index",
-      bandsOf(minhashBase(s, dir)),
-      (_, p) => bandsOf(minhashBase(s, dir)).write.mode("overwrite").parquet(p))
+  private[graft] val BandIndex = new Staging.Parquet("band_index", "documents")((s, dir) =>
+    bandsOf(minhashBase(s, dir)))
+
+  private[ops] def bandIndex(s: SparkSession, dir: String): DataFrame = BandIndex(s, dir)
 
   private def ngramJaccard(s: SparkSession, dir: String): DataFrame =
     nearDupPairs(s, dir).orderBy("doc_a", "doc_b")
@@ -1045,16 +842,15 @@ object Dedup {
     * fourth snapshot-staged corpus artifact: dedup_embedding and
     * dedup_semantic both consume the same IVF-candidates + exact-
     * verify pair generation, which nobody runs twice per corpus
-    * snapshot at 100 TB. Keyed on the EMBEDDINGS table snapshot.
+    * snapshot at 100 TB. Keyed on the EMBEDDINGS table snapshot;
+    * probes the staged IVF cells.
     */
+  private[graft] val EmbPairs = new Staging.Parquet("emb_pairs", "embeddings")((s, dir) =>
+    embeddingPairsIvfUnsorted(Tables.load(s, dir, "embeddings"), EmbTau,
+      Some(stagedCellAssignments(s, dir))))
+
   private[graft] def embeddingNearDupPairs(s: SparkSession, dir: String): DataFrame =
-    stagedBySnapshot(s, dir, embStageMemo, embStageLatest,
-      "graft_emb_pairs", "embedding near-dup pairs",
-      embeddingPairsIvf(Tables.load(s, dir, "embeddings"), EmbTau),
-      (_, p) => embeddingPairsIvfUnsorted(Tables.load(s, dir, "embeddings"), EmbTau,
-          Some(stagedCellAssignments(s, dir)))
-        .write.mode("overwrite").parquet(p),
-      table = "embeddings")
+    EmbPairs(s, dir)
 
   /** Snapshot-staged IVF cell assignments (vec_id, cell) — the grid
     * BOTH embedding-pair generation and the kNN graph probe (the
@@ -1064,13 +860,11 @@ object Dedup {
     * the IVF grid is a maintained index artifact — built once per
     * corpus snapshot, probed by every consumer.
     */
+  private[graft] val IvfCells = new Staging.Parquet("ivf_cells", "embeddings")((s, dir) =>
+    ivfCellAssignments(Tables.load(s, dir, "embeddings")))
+
   private[ops] def stagedCellAssignments(s: SparkSession, dir: String): DataFrame =
-    stagedBySnapshot(s, dir, cellStageMemo, cellStageLatest,
-      "graft_ivf_cells", "IVF cell assignments",
-      ivfCellAssignments(Tables.load(s, dir, "embeddings")),
-      (_, p) => ivfCellAssignments(Tables.load(s, dir, "embeddings"))
-        .write.mode("overwrite").parquet(p),
-      table = "embeddings")
+    IvfCells(s, dir)
 
   private def embeddingDedup(s: SparkSession, dir: String): DataFrame =
     embeddingNearDupPairs(s, dir).orderBy("vec_a", "vec_b")

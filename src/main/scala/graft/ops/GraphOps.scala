@@ -42,17 +42,17 @@ object GraphOps {
     * walk once PER SUPERSTEP.
     *
     * Staged as a SRC-BUCKETED TABLE, built once per corpus snapshot
-    * (repo lesson 26 / round-8 verdict item 2): a bucketed scan
-    * surfaces HashPartitioning(src, PgBuckets), so every
-    * edges⨝mass-on-src superstep join plans with NO exchange on the
+    * in the [[Staging]] memo (repo lesson 26 / round-8 verdict item
+    * 2): a bucketed scan surfaces HashPartitioning(src, PgBuckets),
+    * so every edges⨝mass-on-src superstep join plans with NO exchange on the
     * |E|-sized side — only the skinny |V|-sized mass relation
     * shuffles per round (BucketingSpec proves the no-shuffle shape).
     * Bucket count is DERIVED from the BUILDING session's shuffle
-    * parallelism at stage-build time (floor 32, and part of the memo
-    * key so a wider session rebuilds rather than reuse a narrower
-    * stage): when both superstep join children satisfy the clustered
-    * distribution, EnsureRequirements keeps the child with MORE
-    * partitions and re-exchanges the other — a bucket count below
+    * parallelism at stage-build time (floor 32, and part of the
+    * stage's snapshot so a wider session supersedes a narrower stage
+    * rather than reuse it): when both superstep join children satisfy
+    * the clustered distribution, EnsureRequirements keeps the child
+    * with MORE partitions and re-exchanges the other — a bucket count below
     * spark.sql.shuffle.partitions would put the |E| side on the
     * losing end of that rule and re-shuffle it every round (observed
     * at 8 buckets vs 32 shuffle partitions; a hardcoded 32 had the
@@ -63,20 +63,17 @@ object GraphOps {
     * full |E| exchange; it also rebuilt the fact join once per
     * CONSUMER OP (5× per bench pass), where the bucketed table is
     * built once per corpus. outdeg is bucketed identically so the
-    * superstep's second src join is exchange-free too. A non-local
-    * dir (no snapshot ⇒ no safe memo) falls back to the inline
+    * superstep's second src join is exchange-free too. The stage is
+    * alive while its files and both catalog tables are; freeing it
+    * drops the tables through the session that created them (its
+    * catalog holds them) and deletes the dir. A non-local dir (no
+    * snapshot ⇒ no safe memo) falls back to the inline
     * localCheckpoint staging — correct, never stale.
     */
   private[graft] val PgMinBuckets = 32
   private[graft] def pgBuckets(s: SparkSession): Int =
     math.max(PgMinBuckets,
       s.conf.get("spark.sql.shuffle.partitions", PgMinBuckets.toString).toInt)
-  private val pgStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-  private val pgStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val pgStageLock = new Object
-
   /** The raw (unstaged) edge plan — what the stage writes, and what
     * PlanGuardSpec audits (the registered ops only ever see a
     * bucketed-table scan).
@@ -90,105 +87,47 @@ object GraphOps {
       .unionByName(co.select((col("sp") * 2 + 1).as("src"), (col("c") * 2).as("dst")))
   }
 
-  private def pgSnapshot(dir: String): Option[String] =
-    for {
-      a <- Dedup.corpusSnapshot(dir, "orders")
-      b <- Dedup.corpusSnapshot(dir, "lineitem")
-    } yield java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$a|$b".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-
-  private[ops] def purchaseGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pgSnapshot(dir) match {
-      case None =>
+  private[graft] def purchaseGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    Staging.memo(s, "purchase_graph", dir, Staging.snapshot(dir, "orders", "lineitem")
+        .map(h => s"$h@b${pgBuckets(s)}"))(stagePurchaseGraph(s, dir))
+      .map { case (et, ot) => (s.table(et), s.table(ot)) }
+      .getOrElse {
         val edges = purchaseGraphEdgesPlan(s, dir).localCheckpoint()
         val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
           .localCheckpoint()
         (edges, outdeg)
-      case Some(h) =>
-        val nb = pgBuckets(s)
-        val key = s"$dir@$h@b$nb"
-        val (et, ot, _) = pgStageLock.synchronized {
-          // resetStage has no session: it queues its table names here
-          // and the next staged access (this one) drops them, so dead
-          // catalog entries pointing at deleted dirs never accumulate
-          var pending = pgPendingDrop.poll()
-          while (pending != null) {
-            try s.sql(s"DROP TABLE IF EXISTS $pending")
-            catch { case _: Exception => () }
-            pending = pgPendingDrop.poll()
-          }
-          Option(pgStageMemo.get(key))
-            .filter(t => s.catalog.tableExists(t._1) && s.catalog.tableExists(t._2))
-            .getOrElse {
-              // a memo entry whose tables vanished (dropped externally
-              // or a different session) still owns a backing dir —
-              // reclaim it before rebuilding into a fresh one
-              Option(pgStageMemo.remove(key)).foreach { case (_, _, p) =>
-                deleteDirQuietly(p)
-              }
-              // a rewritten corpus supersedes this dir's previous stage
-              Option(pgStageLatest.get(dir)).filterNot(_ == key)
-                .flatMap(old => Option(pgStageMemo.remove(old)))
-                .foreach { case (e, o, p) =>
-                  try { s.sql(s"DROP TABLE IF EXISTS $e"); s.sql(s"DROP TABLE IF EXISTS $o") }
-                  catch { case _: Exception => () }
-                  deleteDirQuietly(p)
-                }
-              val edgesTable = s"graft_pg_edges_${h}_b$nb"
-              val outdegTable = s"graft_pg_outdeg_${h}_b$nb"
-              val path = graft.sources.SourceOps.tmpDir("graft_pg_stage")
-              s.sql(s"DROP TABLE IF EXISTS $edgesTable")
-              s.sql(s"DROP TABLE IF EXISTS $outdegTable")
-              // repartition on the bucket key first ⇒ one file per
-              // bucket, so bucket-sorted reads stay sorted
-              purchaseGraphEdgesPlan(s, dir)
-                .repartition(nb, col("src"))
-                .write.mode("overwrite").option("path", s"$path/edges")
-                .bucketBy(nb, "src").sortBy("src").saveAsTable(edgesTable)
-              s.table(edgesTable).groupBy("src").agg(count(lit(1)).as("outdeg"))
-                .repartition(nb, col("src"))
-                .write.mode("overwrite").option("path", s"$path/outdeg")
-                .bucketBy(nb, "src").sortBy("src").saveAsTable(outdegTable)
-              val entry = (edgesTable, outdegTable, path)
-              pgStageMemo.put(key, entry)
-              pgStageLatest.put(dir, key)
-              entry
-            }
-        }
-        (s.table(et), s.table(ot))
-    }
-
-  private def deleteDirQuietly(path: String): Unit = Dedup.deleteDirQuietly(path)
-
-  private val pgPendingDrop =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  /** Drop staged purchase-graph tables and their backing dirs
-    * (Bench's explicit staging phase re-times the build). When a
-    * session is available the catalog DROPs run FIRST, so there is
-    * no window where the catalog holds external tables whose data
-    * paths are already gone (a stray s.table(graft_pg_*) read or a
-    * catalog enumeration in that window would fail on the missing
-    * path). The [[pgPendingDrop]] queue — drained by the next
-    * [[purchaseGraph]] call — remains only for the truly session-less
-    * path (and for a DROP that itself failed).
-    */
-  private[ops] def resetStage(sOpt: Option[SparkSession]): Unit = {
-    import scala.jdk.CollectionConverters._
-    pgStageMemo.values.asScala.foreach { case (e, o, p) =>
-      Seq(e, o).foreach { t =>
-        sOpt match {
-          case Some(s) =>
-            try s.sql(s"DROP TABLE IF EXISTS $t")
-            catch { case _: Exception => pgPendingDrop.add(t) }
-          case None => pgPendingDrop.add(t)
-        }
       }
-      deleteDirQuietly(p)
+
+  private def stagePurchaseGraph(s: SparkSession, dir: String): Staging.Staged[(String, String)] = {
+    val nb = pgBuckets(s)
+    // one table pair per stage dir: the dir's unique temp suffix names it
+    def tables(path: String): (String, String) = {
+      val id = java.nio.file.Paths.get(path).getFileName.toString.stripPrefix("graft_pg_stage")
+      (s"graft_pg_edges_$id", s"graft_pg_outdeg_$id")
     }
-    pgStageMemo.clear()
-    pgStageLatest.clear()
-    resetPrFixpoint()
+    val files = Staging.inTmpDir("graft_pg_stage") { path =>
+      val (edgesTable, outdegTable) = tables(path)
+      // repartition on the bucket key first ⇒ one file per
+      // bucket, so bucket-sorted reads stay sorted
+      purchaseGraphEdgesPlan(s, dir)
+        .repartition(nb, col("src"))
+        .write.mode("overwrite").option("path", s"$path/edges")
+        .bucketBy(nb, "src").sortBy("src").saveAsTable(edgesTable)
+      s.table(edgesTable).groupBy("src").agg(count(lit(1)).as("outdeg"))
+        .repartition(nb, col("src"))
+        .write.mode("overwrite").option("path", s"$path/outdeg")
+        .bucketBy(nb, "src").sortBy("src").saveAsTable(outdegTable)
+    }
+    val (et, ot) = tables(files.value)
+    Staging.Staged((et, ot),
+      cur => files.alive(cur) && cur.catalog.tableExists(et) && cur.catalog.tableExists(ot),
+      () => {
+        Seq(et, ot).foreach { t =>
+          try s.sql(s"DROP TABLE IF EXISTS $t")
+          catch { case scala.util.control.NonFatal(_) => () }
+        }
+        files.free()
+      })
   }
 
   private def pagerank(s: SparkSession, dir: String): DataFrame = {
@@ -261,56 +200,24 @@ object GraphOps {
   /** The converged-PageRank fixpoint as a SHARED per-snapshot artifact
     * (r14 VERDICT item 6): the loop's per-round residuals were already
     * computed (they ARE the stop test) but thrown away; now the loop
-    * returns (final mass, the round→residual curve) and is memoized
-    * per corpus snapshot so graph_pagerank_converged and
-    * graph_pagerank_residuals split ONE ~36-round run instead of each
-    * paying it — the cluster_labels/purchase_graph staging convention,
-    * reset + re-billed by Bench's timed staging phase (key
-    * `pr_fixpoint`). Zero extra jobs per round: the curve rows are the
-    * driver-side scalars the residual action already returned.
+    * returns (final mass, the round→residual curve) and is staged in
+    * the [[Staging]] memo per corpus snapshot, so
+    * graph_pagerank_converged and graph_pagerank_residuals split ONE
+    * ~36-round run instead of each paying it. Re-billed by Bench's
+    * timed staging phase (line `pr_fixpoint`). Zero extra jobs per
+    * round: the curve rows are the driver-side scalars the residual
+    * action already returned. The stage is alive only for the session
+    * that built it (its checkpoint blocks die with that session's
+    * executors); freeing it releases those blocks.
     */
-  private val prMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Set[Int], Seq[(Long, Long)])]()
-  private val prLatest = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val prLock = new Object
-
-  private[ops] def prFixpoint(s: SparkSession, dir: String): (DataFrame, Seq[(Long, Long)]) =
-    pgSnapshot(dir) match {
-      case None =>
-        val (m, _, curve) = prFixpointComputed(s, dir)
-        (m, curve)
-      case Some(h) =>
-        val key = s"$dir@$h"
-        val (m, _, curve) = prLock.synchronized {
-          Option(prMemo.get(key))
-            // a memo built by a STOPPED session cannot serve this one —
-            // its checkpoint blocks died with the old executor store
-            .filter(_._1.sparkSession eq s)
-            .getOrElse {
-              Option(prMemo.remove(key))
-                .foreach { case (df, ids, _) => Rounds.freeQuietly(df, ids) }
-              // a rewritten corpus supersedes the dir's previous fixpoint
-              Option(prLatest.get(dir)).filterNot(_ == key)
-                .flatMap(old => Option(prMemo.remove(old)))
-                .foreach { case (df, ids, _) => Rounds.freeQuietly(df, ids) }
-              val e = prFixpointComputed(s, dir)
-              prMemo.put(key, e)
-              prLatest.put(dir, key)
-              e
-            }
-        }
-        (m, curve)
+  private[graft] def prFixpoint(s: SparkSession, dir: String): (DataFrame, Seq[(Long, Long)]) =
+    Staging.memo(s, "pr_fixpoint", dir, Staging.snapshot(dir, "orders", "lineitem")) {
+      val (m, ids, curve) = prFixpointComputed(s, dir)
+      Staging.Staged((m, curve), _ eq m.sparkSession, () => Rounds.freeQuietly(m, ids))
+    }.getOrElse {
+      val (m, _, curve) = prFixpointComputed(s, dir)
+      (m, curve)
     }
-
-  /** Drop the memoized fixpoints and free their checkpoint blocks —
-    * part of [[resetStage]] so Bench re-bills the build.
-    */
-  private def resetPrFixpoint(): Unit = {
-    import scala.jdk.CollectionConverters._
-    prMemo.values.asScala.foreach { case (df, ids, _) => Rounds.freeQuietly(df, ids) }
-    prMemo.clear()
-    prLatest.clear()
-  }
 
   private def prFixpointComputed(
       s: SparkSession, dir: String): (DataFrame, Set[Int], Seq[(Long, Long)]) = {

@@ -301,7 +301,7 @@ object Multimodal {
       .agg(count(lit(1)).as("bucket_n"))
     // per-corpus-snapshot METADATA (an ANALYZE statistic), memoized
     // like Dedup's hot-shingle stats so registered calls pay it once
-    val hotKey = Dedup.corpusSnapshot(dir)
+    val hotKey = Staging.snapshot(dir, "documents")
       .map(h => (s"$dir@$h", PhBucketCap))
     def countHot(): Long = {
       val n = sizes.filter(col("bucket_n") > PhBucketCap).count()

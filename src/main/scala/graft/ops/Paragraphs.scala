@@ -106,34 +106,20 @@ object Paragraphs {
       .withColumn("msig", expr("graft_minhash32(sh)"))
   }
 
-  /** [[canonPlan]] staged once per corpus snapshot (the
-    * Dedup.stagedBySnapshot convention). The op consumes canon FOUR
-    * times (band self-join x + y, verify legs a + b); unstaged, each
-    * consumer re-ran the whole tokenize→cut→window→minhash chain — the
-    * r15 before-plan showed 16 parquet scans of `documents` and two
-    * graft_minhash32 evaluations with zero subtree reuse. Staged, the
-    * chain runs once per corpus snapshot and every consumer is a scan
-    * of the chunk-grain parquet (guide §2.4: share one exchange;
-    * §1.2: fix the pass structure before per-task work). Reset +
-    * re-billed by Bench's timed staging phase (key `cdc_canon`).
+  /** [[canonPlan]] staged once per corpus snapshot in the [[Staging]]
+    * memo. The op consumes canon FOUR times (band self-join x + y,
+    * verify legs a + b); unstaged, each consumer re-ran the whole
+    * tokenize→cut→window→minhash chain — the r15 before-plan showed
+    * 16 parquet scans of `documents` and two graft_minhash32
+    * evaluations with zero subtree reuse. Staged, the chain runs once
+    * per corpus snapshot and every consumer is a scan of the
+    * chunk-grain parquet (guide §2.4: share one exchange; §1.2: fix
+    * the pass structure before per-task work). Re-billed by Bench's
+    * timed staging phase (line `cdc_canon`).
     */
-  private val canonStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  private val canonStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
+  private[graft] val CdcCanon = new Staging.Parquet("cdc_canon", "documents")(canonPlan)
 
-  private[ops] def stagedCanon(s: SparkSession, dir: String): DataFrame =
-    Dedup.stagedBySnapshot(s, dir, canonStageMemo, canonStageLatest,
-      "graft_cdc_canon", "CDC canonical chunks",
-      canonPlan(s, dir),
-      (_, p) => canonPlan(s, dir).write.mode("overwrite").parquet(p))
-
-  private[ops] def resetCanonStage(): Unit = {
-    import scala.jdk.CollectionConverters._
-    canonStageMemo.values.asScala.foreach(Dedup.deleteDirQuietly)
-    canonStageMemo.clear()
-    canonStageLatest.clear()
-  }
+  private[ops] def stagedCanon(s: SparkSession, dir: String): DataFrame = CdcCanon(s, dir)
 
   private def cdcChunks(s: SparkSession, dir: String): DataFrame = {
     val canon = stagedCanon(s, dir)

@@ -55,6 +55,17 @@ private[ops] object Rounds {
   def freeQuietly(df: DataFrame, ids: Set[Int]): Unit =
     try free(df, ids) catch { case _: Throwable => () }
 
+  /** The persisted RDD ids behind `df`'s checkpointed leaves (its
+    * LogicalRDD scans) — what a one-shot consumer of `df`, done with
+    * it, may pass to [[free]] after removing the ids it does not own.
+    */
+  def leafCheckpoints(df: DataFrame): Set[Int] = {
+    val persisted = df.sparkSession.sparkContext.getPersistentRDDs.keySet
+    df.queryExecution.logical.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.LogicalRDD => lineageIds(r.rdd)
+    }.flatten.toSet.filter(persisted.contains)
+  }
+
   /** All RDD ids reachable through `rdd`'s dependency graph
     * (including itself). The checkpointed block manager RDD is an
     * ancestor of the returned Dataset's physical scan, so it is

@@ -1009,27 +1009,14 @@ object Similarity {
     * sim_knn_graph emits it and graph_triangles consumes it, and at
     * 100 TB nobody builds the corpus-wide neighbor graph twice per
     * snapshot (in production it is a maintained index, like the
-    * MinHash band index). Keyed on the embeddings table snapshot;
-    * reset with the other stages between Bench warmup/timed phases.
+    * MinHash band index). Staged in the [[Staging]] memo, keyed on the
+    * embeddings table snapshot; probes the staged IVF cells.
     */
-  private val knnStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), String]()
-  private val knnStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  private[ops] def resetKnnStage(deleteDir: String => Unit): Unit = {
-    import scala.jdk.CollectionConverters._
-    knnStageMemo.values.asScala.foreach(deleteDir)
-    knnStageMemo.clear()
-    knnStageLatest.clear()
-  }
+  private[graft] val KnnGraph =
+    new Staging.Parquet("knn_graph", "embeddings")(knnGraphUnsorted)
 
   private[ops] def knnGraphStaged(s: SparkSession, dir: String): DataFrame =
-    Dedup.stagedBySnapshot(s, dir, knnStageMemo, knnStageLatest,
-      "graft_knn_graph", "kNN graph",
-      knnGraphUnsorted(s, dir),
-      (_, p) => knnGraphUnsorted(s, dir).write.mode("overwrite").parquet(p),
-      table = "embeddings")
+    KnnGraph(s, dir)
 
   private def knnGraph(s: SparkSession, dir: String): DataFrame =
     knnGraphStaged(s, dir).orderBy("vec_id", "rank")

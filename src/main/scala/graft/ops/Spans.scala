@@ -86,19 +86,6 @@ object Spans {
     staged
   }
 
-  /** (dir@snapshot|tag|shards) → staged shard root. Staged-shard runs
-    * memoize their staging dir per corpus snapshot (ADVICE r14: a
-    * fresh never-deleted tmpDir per invocation accumulated dup-rate-
-    * sized dirs across a long-lived JVM's repeated runs) — the
-    * StreamStage/Dedup staged-dir convention: reuse while the
-    * snapshot holds, evict + delete on supersede, re-stage if reaped.
-    */
-  private val shardStageMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val shardStageLatest =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val shardStageLock = new Object
-
   /** Run `perShard` (a wid-keyed postings sub-pipeline emitting
     * skinny (doc_id, pos, occ) rows) over the whole postings relation
     * or over each pmod(wid, shards) slice, per the session conf.
@@ -114,49 +101,19 @@ object Spans {
       }
       if (!staged) parts.reduce(_ unionByName _)
       else {
-        def build(): String = {
-          val root = graft.sources.SourceOps.tmpDir("graft_spans_shard")
+        // staged-shard runs stage their shard root once per corpus
+        // snapshot in the [[Staging]] memo (ADVICE r14: a fresh
+        // never-deleted tmpDir per invocation accumulated dup-rate-
+        // sized dirs across a long-lived JVM's repeated runs)
+        val root = Staging.dirFor(s, s"spans_${tag}_$shards", dir,
+            Staging.snapshot(dir, "documents"), "graft_spans_shard") { r =>
           parts.zipWithIndex.foreach { case (df, i) =>
-            df.write.mode("overwrite").parquet(s"$root/s$i")
+            df.write.mode("overwrite").parquet(s"$r/s$i")
           }
-          root
-        }
-        val root = Dedup.corpusSnapshot(dir, "documents") match {
-          case None => build() // no safe memo key; one-shot dir
-          case Some(snap) =>
-            val key = s"$dir@$snap|$tag|$shards"
-            shardStageLock.synchronized {
-              // a rewritten corpus supersedes this (dir, tag)'s stage
-              Option(shardStageLatest.put(s"$dir|$tag|$shards", key))
-                .filterNot(_ == key)
-                .flatMap(old => Option(shardStageMemo.remove(old)))
-                .foreach(Dedup.deleteDirQuietly)
-              Option(shardStageMemo.get(key))
-                // a /tmp cleaner may have reaped it — re-stage, never
-                // serve a partial union
-                .filter(r => (0 until shards)
-                  .forall(i => graft.sources.Fs.exists(s, s"$r/s$i")))
-                .getOrElse {
-                  Option(shardStageMemo.remove(key)).foreach(Dedup.deleteDirQuietly)
-                  val r = build()
-                  shardStageMemo.put(key, r)
-                  r
-                }
-            }
         }
         s.read.parquet((0 until shards).map(i => s"$root/s$i"): _*)
       }
     }
-  }
-
-  /** Drop the memoized shard staging dirs (probe hygiene; the staged-
-    * shard mode never runs in official captures).
-    */
-  private[ops] def resetShardStage(): Unit = {
-    import scala.jdk.CollectionConverters._
-    shardStageMemo.values.asScala.foreach(Dedup.deleteDirQuietly)
-    shardStageMemo.clear()
-    shardStageLatest.clear()
   }
 
   private def spans(s: SparkSession, dir: String): DataFrame = {

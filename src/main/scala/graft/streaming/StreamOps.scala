@@ -59,7 +59,7 @@ object StreamOps {
     * events nanos column as BIGINT; streams watermark on TIMESTAMP) —
     * shared by the tumbling and sliding gates (identical projection).
     */
-  private[streaming] def ev3Src(s: SparkSession, dir: String): String =
+  private[graft] def ev3Src(s: SparkSession, dir: String): String =
     StreamStage.source(s, dir, "ev3") { p =>
       Tables.events(s, dir)
         .select(expr("timestamp_micros(ts DIV 1000)").as("ts"),
@@ -920,10 +920,11 @@ object StreamOps {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
 
-  /** Every staged-source builder, for StreamStage.stageAllTimed
-    * (Bench's timed stream staging phase). Keys = shape names.
+  /** Every staged-source builder, declared in
+    * [[graft.ops.Staging.artifacts]] (Bench's timed staging phase).
+    * Keys = shape names.
     */
-  private[streaming] val stagers: Seq[(String, (SparkSession, String) => String)] = Seq(
+  private[graft] val stagers: Seq[(String, (SparkSession, String) => String)] = Seq(
     "ev3" -> (ev3Src _),
     "2p" -> (twoPhaseSrc _),
     "sess" -> (sessSrc _),

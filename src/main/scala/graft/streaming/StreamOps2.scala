@@ -459,8 +459,10 @@ object StreamOps2 {
       |FROM est e LEFT JOIN ex x ON x.t = e.t AND x.d = e.d
       |ORDER BY event_type, decile""".stripMargin
 
-  /** StreamStage.stageAllTimed registry (StreamOps.stagers twin). */
-  private[streaming] val stagers: Seq[(String, (SparkSession, String) => String)] = Seq(
+  /** Staged-source builders, declared in [[graft.ops.Staging.artifacts]]
+    * after StreamOps.stagers.
+    */
+  private[graft] val stagers: Seq[(String, (SparkSession, String) => String)] = Seq(
     "hh" -> (hhSrc _),
     "kmv" -> (kmvSrc _),
     "quant" -> (quantSrc _))

@@ -49,14 +49,22 @@ class PlanGuardSpec extends AnyFunSuite with SparkSuite {
         rddRows(r) <= CkptWindowRowCeiling => ()
     }.isDefined
 
+  /** The unstaged plans behind the declared staged artifacts. */
+  private def stagingPlans: Seq[(String, org.apache.spark.sql.DataFrame)] =
+    graft.ops.Staging.artifacts.flatMap(a =>
+      a.unstaged.map(plan => s"${a.name}(unstaged)" -> plan(spark, sfDir)))
+
   /** Every plan the guards cover: each registered op's surfaced plan
     * PLUS the staging subplans that execute behind a staged-parquet
     * read (the staged ops' surfaced plan is just a scan — without
     * these the riskiest subplan in the repo would be unguarded).
     */
   private def guardedPlans: Seq[(String, org.apache.spark.sql.DataFrame)] =
-    Registry.all.map(op => op.name -> op.run(spark, sfDir)) ++
-      graft.ops.Dedup.stagingPlans(spark, sfDir)
+    Registry.all.map(op => op.name -> op.run(spark, sfDir)) ++ stagingPlans
+
+  test("the declared artifact list supplies all 9 unstaged staging plans") {
+    assert(graft.ops.Staging.artifacts.count(_.unstaged.isDefined) == 9)
+  }
 
   test("no registered op (or staging subplan) compiles to a cartesian product") {
     val offenders = guardedPlans.flatMap { case (name, df) =>

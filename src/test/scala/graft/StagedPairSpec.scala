@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * never serve a stale or dangling stage (ADVICE r4).
   */
 class StagedPairSpec extends AnyFunSuite with SparkSuite {
-  import graft.ops.Dedup
+  import graft.ops.{Dedup, Staging}
 
   test("staged pair graph equals the inline (unstaged) pair plan") {
     val staged = Dedup.nearDupPairs(spark, sfDir)
@@ -45,11 +45,32 @@ class StagedPairSpec extends AnyFunSuite with SparkSuite {
     assert(again.count() == n)
   }
 
+  test("a stage dir that lost a part file re-stages instead of serving a partial set") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val first = Dedup.nearDupPairs(spark, sfDir)
+    val n = first.count()
+    val stageDir = Paths.get(
+      new java.net.URI(first.inputFiles.head).getPath).getParent
+    // a /tmp cleaner reaping files one by one: the largest part file
+    // goes (it holds rows however the pairs split), the dir and its
+    // _SUCCESS marker stay
+    val listing = Files.list(stageDir)
+    val part = try listing.iterator().asScala.filter { p =>
+        val name = p.getFileName.toString
+        name.startsWith("part-") && name.endsWith(".parquet")
+      }.maxBy(Files.size(_))
+      finally listing.close()
+    Files.delete(part)
+    assert(Files.exists(stageDir.resolve("_SUCCESS")))
+    assert(Dedup.nearDupPairs(spark, sfDir).count() == n)
+  }
+
   test("corpusSnapshot refuses non-local and absent paths (no constant-hash staleness)") {
-    assert(Dedup.corpusSnapshot("hdfs://nn:8020/warehouse/docs").isEmpty)
-    assert(Dedup.corpusSnapshot("s3a://bucket/prefix").isEmpty)
-    assert(Dedup.corpusSnapshot("/no/such/dir/anywhere").isEmpty)
-    assert(Dedup.corpusSnapshot(sfDir).nonEmpty)
+    assert(Staging.snapshot("hdfs://nn:8020/warehouse/docs", "documents").isEmpty)
+    assert(Staging.snapshot("s3a://bucket/prefix", "documents").isEmpty)
+    assert(Staging.snapshot("/no/such/dir/anywhere", "documents").isEmpty)
+    assert(Staging.snapshot(sfDir, "documents").nonEmpty)
   }
 
   test("resetPairStage drops staged dirs so the next consumer re-stages") {
@@ -79,5 +100,34 @@ class StagedPairSpec extends AnyFunSuite with SparkSuite {
       .collect().toSeq == labelRows)
     assert(Registry.byName("dedup_minhash_lsh").run(spark, sfDir)
       .collect().toSeq == lshRows)
+
+    // every declared artifact staged fresh, then ONE reset: no staged
+    // dir, purchase-graph table or fixpoint block may outlive it
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val stageDir = ("graft_(ivf_cells|emb_pairs|knn_graph|pair_graph|band_index|" +
+      "cluster_labels|cdc_canon|pg_stage|stream_.+_src).*").r
+    def stageDirs(): Set[java.nio.file.Path] = {
+      import scala.jdk.CollectionConverters._
+      val listing = Files.list(tmp)
+      try listing.iterator().asScala.filter(p => Files.isDirectory(p) &&
+        stageDir.matches(p.getFileName.toString)).toSet
+      finally listing.close()
+    }
+    def pgTables(): Seq[String] =
+      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_pg_")).toSeq
+    Dedup.resetPairStage()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
+    val dirsBefore = stageDirs()
+    Staging.stageAllTimed(spark, sfDir)
+    val staged = stageDirs() -- dirsBefore
+    // one dir per declared artifact but pr_fixpoint (in-memory blocks)
+    assert(staged.size == Staging.artifacts.size - 1, staged)
+    assert(pgTables().size == 2)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- rdds).nonEmpty)
+    Dedup.resetPairStage()
+    assert(staged.filter(Files.exists(_)).isEmpty, "reset must delete every staged dir")
+    assert(pgTables().isEmpty, "reset must drop the purchase-graph tables")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- rdds).isEmpty,
+      "reset must free the fixpoint's checkpoint blocks")
   }
 }

@@ -34,8 +34,18 @@ class StreamStageSpec extends AnyFunSuite with graft.SparkSuite {
   test("every stager key is unique and builds a non-empty source") {
     val all = StreamOps.stagers ++ StreamOps2.stagers
     assert(all.map(_._1).distinct.size == all.size, "shape keys must be unique")
-    val timed = StreamStage.stageAllTimed(spark, sfDir)
-    assert(timed.size == all.size)
+    all.foreach { case (shape, build) =>
+      val src = java.nio.file.Files.list(java.nio.file.Paths.get(build(spark, sfDir)))
+      try assert(src.count() > 0, s"shape $shape staged an empty source") finally src.close()
+    }
+    // graft.Bench's `staging` JSON and the benchmark key on these
+    // lines: the corpus artifacts, then one line per shape
+    val timed = graft.ops.Staging.stageAllTimed(spark, sfDir)
+    assert(timed.map(_._1) == Seq("ivf_cells", "emb_pairs", "knn_graph", "pair_graph",
+      "band_index", "cluster_labels", "cdc_canon", "purchase_graph", "pr_fixpoint") ++
+      Seq("ev3", "2p", "sess", "attr", "attro", "dedup", "hll", "f2", "sw", "evfull",
+        "upsert", "late", "vel", "hh", "kmv", "quant").map("stream_stage_" + _))
+    assert(timed.drop(9).map(_._1) == all.map("stream_stage_" + _._1))
     assert(timed.forall(_._2 >= 0.0))
   }
 }
