@@ -229,13 +229,11 @@ object Curation {
 
     // near-dup: prior CC + delta merge over the staged pair index
     val nd = Dedup.nearDupPairs(s, dir).select("doc_a", "doc_b")
-    def cc(pairs: DataFrame, name: String): DataFrame = {
-      val e = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      // small vertex set, dozens of shuffles — the Cc kernel scopes
-      // its own loop to a size-derived partition count (r16)
-      Cc.minLabelComponents(sym, RefreshCcRounds, name)
-    }
+    // both graphs are delta- or near-dup-sized: the Cc kernel resolves
+    // them on the driver below its edge bound
+    def cc(pairs: DataFrame, name: String): DataFrame =
+      Cc.minLabelComponents(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
+        RefreshCcRounds, name)
     // doc_a < doc_b always, and batch ids are the largest — so a pair
     // involves a batch doc iff doc_b > thr
     val priorLab = cc(nd.filter(col("doc_b") <= thr), "curation_refresh(prior)")

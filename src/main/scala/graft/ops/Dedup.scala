@@ -180,11 +180,10 @@ object Dedup {
   /** Staged connected-component cluster labels (doc_id, cluster_id,
     * cluster_size) — the level ABOVE the pair graph: dedup_clusters,
     * dedup_corpus_pipeline and curation_manifest all consume the CC
-    * fixpoint, and the iterative label propagation is the expensive
-    * part once pairs are staged, so nobody runs it three times per
-    * corpus snapshot either. Derived FROM the staged pairs (one
-    * lineage: pairs stage → labels stage → consumers); constructing
-    * the plan RUNS the CC loop.
+    * labels, so nobody computes them three times per corpus snapshot
+    * either. Derived FROM the staged pairs (one lineage: pairs stage →
+    * labels stage → consumers); constructing the plan RUNS the Cc
+    * kernel (its bounded collect, and above the bound its loop).
     */
   private[graft] val ClusterLabels =
     new Staging.Parquet("cluster_labels", "documents")(clustersComputed)
@@ -962,11 +961,10 @@ object Dedup {
   // (a self-join; labels are always vertex ids so the lookup is total).
   // Plain propagation needs O(component diameter) rounds; the jump
   // squares the reach per round ⇒ O(log diameter) — a 1000-hop chain
-  // converges in ~10 rounds, not 1000. Each round is two shuffles on
-  // doc_id over the (small) near-dup vertex set; one driver action
-  // per round (the label-sum fixpoint test — labels only decrease,
-  // so equal consecutive sums ⇔ fixpoint; the previous round's sum
-  // is carried over, not recomputed).
+  // converges in ~10 rounds, not 1000. That loop is the Cc kernel's
+  // path above Cc.DriverEdgeBound edge rows; a near-dup graph below it
+  // (every gate-scale corpus: a few hundred pairs) is resolved by one
+  // bounded collect and a driver-side union-find, same labels.
   // ---------------------------------------------------------------
   private val MaxCcRounds = 20 // pointer jumping: covers diameter ~2^20
 
@@ -978,27 +976,21 @@ object Dedup {
     * the labels stage materializes.
     */
   private def clustersComputed(s: SparkSession, dir: String): DataFrame = {
-    // ngramJaccard FIRST, outside the partition override: it may
-    // trigger the corpus-wide pair-graph STAGING, which must run at
-    // full parallelism — only the CC loop below is small
-    val pairs = ngramJaccard(s, dir).select("doc_a", "doc_b")
-    // the CC loop shuffles a SMALL vertex set (near-dup docs only)
-    // dozens of times; the Cc kernel scopes its own loop to a
-    // SIZE-DERIVED partition count (r16, VERDICT item 6 — resolves
-    // to the r15 constant 8 at gate scale, grows with the near-dup
-    // vertex count at 100 TB instead of serializing the loop)
-    clustersLoop(pairs)
+    // ngramJaccard may trigger the corpus-wide pair-graph STAGING,
+    // which runs at full parallelism; the Cc kernel resolves the small
+    // near-dup graph on the driver, and scopes its own loop to a
+    // SIZE-DERIVED partition count only above its edge bound
+    clustersLoop(ngramJaccard(s, dir).select("doc_a", "doc_b"))
   }
 
-  /** Min-label pointer-jumping CC, delegated to the shared [[Cc]]
-    * kernel (one loop for the dedup and graph families — see
-    * Cc.scala for the checkpoint/unpersist convention).
+  /** Min-label CC over the undirected near-dup pairs, delegated to
+    * the shared [[Cc]] kernel (one kernel for the dedup and graph
+    * families — see Cc.scala for its driver and loop paths).
     */
   private def clustersLoop(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    val sym = edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst")))
-    val labels = Cc.minLabelComponents(sym, MaxCcRounds, "dedup_clusters")
+    val labels = Cc.minLabelComponents(
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")),
+        MaxCcRounds, "dedup_clusters")
       .select(col("v").as("doc_id"), col("label"))
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
@@ -1012,18 +1004,17 @@ object Dedup {
   // (the same cell-bounded IVF candidates + exact cosine ≥ τ verify
   // dedup_embedding gates), one canonical vector kept per semantic
   // cluster (min vec_id — deterministic on both engines), everyone
-  // else marked dropped. Reuses the pointer-jumping CC loop the text
-  // pipeline proved (log-diameter rounds over the tiny near-dup
-  // vertex set), so the embedding and text dedup stacks share one
+  // else marked dropped. Reuses the Cc kernel the text pipeline
+  // proved, so the embedding and text dedup stacks share one
   // clustering engine. Output is the per-vector verdict the corpus
   // pipeline filters on (`WHERE is_kept = 1`).
   // ---------------------------------------------------------------
   private def semanticDedup(s: SparkSession, dir: String): DataFrame = {
-    // staged pair generation runs at full parallelism; only the CC
-    // loop is scoped down (same move as clustersComputed)
+    // staged pair generation runs at full parallelism; the Cc kernel
+    // picks its own path (same move as clustersComputed)
     val pairs = embeddingNearDupPairs(s, dir)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val labels = clustersLoop(pairs) // Cc scopes its own loop (r16)
+    val labels = clustersLoop(pairs)
     labels.select(col("doc_id").as("vec_id"), col("cluster_id"), col("cluster_size"),
         when(col("doc_id") === col("cluster_id"), 1).otherwise(0).as("is_kept"))
       .orderBy("vec_id")

@@ -226,9 +226,11 @@ object GraphOps2 {
   // LINEAR with a small constant, no skew cap needed (the
   // co-purchase SUPPLIER graph was evaluated and rejected: uniform
   // TPC-H routing makes it COMPLETE — K-threshold can't fragment it
-  // and the all-pairs grain is |S|²). The CC loop is pointer-jumping
-  // min-label propagation: O(log diameter) rounds, each one
-  // |E|-join + |V|-min-agg + |V|⋈|V| jump, loud cap (see Cc.scala).
+  // and the all-pairs grain is |S|²). The Cc kernel resolves the
+  // graph on the driver up to Cc.DriverEdgeBound edge rows; above it
+  // runs pointer-jumping min-label propagation: O(log diameter)
+  // rounds, each one |E|-join + |V|-min-agg + |V|⋈|V| jump, loud cap
+  // (see Cc.scala).
   // The threshold keeps components SMALL at every SF (co-order
   // triples thin out as the catalog grows), which also bounds the
   // DuckDB oracle's recursive closure at Σ size² — verified against
@@ -247,19 +249,10 @@ object GraphOps2 {
       .agg(count(lit(1)).as("n_orders"))
       .filter(col("n_orders") >= CoOrderMin)
       .select("src", "dst")
-    // stage the edge relation AT FULL PARALLELISM before narrowing
-    // the conf: the |lineitem|-scale self-join + >=K aggregate must
-    // not run with the loop's 8 reducers (same convention as
-    // Dedup.clustersComputed, where the pair-graph staging is the
-    // full-parallelism action). localCheckpoint is the action; the
-    // loop below then reads the materialized blocks.
-    val sym = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    // the loop shuffles a SMALL vertex set dozens of times; the Cc
-    // kernel scopes its own loop to a size-derived partition count
-    // (r16, VERDICT item 6)
-    val labels = Cc.minLabelComponents(sym, MaxCcRounds, "graph_connected_components")
+    // the |lineitem|-scale self-join + >=K aggregate runs AT FULL
+    // PARALLELISM: the kernel's first action (its bounded collect)
+    // evaluates e0 before any loop scope narrows the partition count
+    val labels = Cc.minLabelComponents(e0, MaxCcRounds, "graph_connected_components")
     Tables.load(s, dir, "part").select(col("p_partkey").as("v"))
       .join(labels, Seq("v"), "left")
       .select(col("v"), coalesce(col("label"), col("v")).as("component_id"))
