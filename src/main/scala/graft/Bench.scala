@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-bench", s"local[$cpus]", cpus.toInt)
     // JMH-style: an untimed warmup pass over every query (JVM/codegen/
     // parquet reader init), then an explicitly timed STAGING phase,
     // then SPARK_GRAFT_PASSES (default 3) timed passes with per-op
@@ -18,20 +11,11 @@ object Bench {
     // (SCALING_r06.md), and min-of-N is the drift-robust estimator.
     // Stable alphabetical order so per-round numbers are comparable.
     // SPARK_GRAFT_QUERIES=a,b,c restricts to a subset for local
-    // iteration — unknown names fail fast instead of silently
-    // benchmarking a partial (or empty) set.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_QUERIES names not registered: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
+    // iteration (unknown names fail fast, see Registry.select).
+    val selected = Registry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    selected.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => }
+    selected.foreach { op =>
+      try { op.run(spark, sfDir).count() } catch { case _: Throwable => }
     }
     // Warmup primed JVM/codegen/parquet readers — but it also staged
     // the shared corpus artifacts (pair graph, band index, labels,
@@ -75,18 +59,18 @@ object Bench {
     // the total) — elapsed-to-failure must never masquerade as a fast
     // result; any failing pass marks the op failed
     val perPass: Seq[Seq[(String, Double)]] = (1 to passes).map { _ =>
-      selected.map { case (name, fn) =>
+      selected.map { op =>
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try { op.run(spark, sfDir).count(); true }
           catch { case e: Throwable =>
-            System.err.println(s"BENCH ERROR $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
+            System.err.println(s"BENCH ERROR ${op.name}: ${e.getClass.getSimpleName}: ${e.getMessage}")
             false
           }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        op.name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
     }
-    val results: Seq[(String, Double)] = selected.map(_._1).zipWithIndex.map { case (name, i) =>
+    val results: Seq[(String, Double)] = selected.map(_.name).zipWithIndex.map { case (name, i) =>
       val times = perPass.map(_(i)._2)
       name -> (if (times.exists(_ < 0)) -1.0 else times.min)
     }

@@ -2,15 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with scale-ready defaults.
+/** The one way graft makes a session. Bench, Verify, ScaleUp, the
+  * tests and the benchmark all call [[build]], so every one of them runs
+  * the same engine: the graft kernels and optimizer rule of
+  * [[graft.plans.GraftExtensions]], plus the conf set of [[tune]].
   *
   * Mirrors the deployment posture the reference's warehouse implies
-  * (ref: /root/reference/dag/SMFG_DW_ETL_DAG.py — EOD batch over many
-  * tables): AQE on (runtime re-plan + skew-join), small shuffle
-  * partition count for local mode (callers override for clusters),
-  * UTC session time zone for reproducible date semantics.
+  * (an end-of-day batch over many tables): AQE on (runtime re-plan +
+  * skew-join), a small shuffle partition count for local mode (callers
+  * override for clusters), UTC session time zone for reproducible date
+  * semantics.
   */
 object GraftSession {
+
+  /** Make (or join) the session: builder-time settings only — app
+    * name, master, the graft extensions, shuffle partitions, UI off —
+    * then [[tune]] for every runtime conf.
+    */
   def build(
       appName: String = "graft",
       master: String = "local[*]",
@@ -20,27 +28,20 @@ object GraftSession {
       .builder()
       .appName(appName)
       .master(master)
-      // native graft kernels in the function registry + the
-      // HOF-dot-product → ArrayDot optimizer rewrite (cluster deploys
-      // set spark.sql.extensions=graft.plans.GraftExtensions instead)
+      // the graft kernels in the function registry + the HOF
+      // dot-product → ArrayDot optimizer rewrite (cluster deploys set
+      // spark.sql.extensions=graft.plans.GraftExtensions instead)
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // session contract: parquet nanosecond timestamps surface as
-      // BIGINT nanos everywhere (graft does integer epoch math on
-      // them); set once here so no loader flips conf mid-session
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
+    tune(spark)
   }
 
-  /** Apply the graft conf set to an externally-built session (Verify /
-    * Bench construct their own); idempotent.
+  /** The single list of graft's runtime session confs; [[build]] applies
+    * it, and it is idempotent, so a caller that also calls it on a
+    * built session changes nothing.
     */
   def tune(spark: SparkSession): SparkSession = {
     // bounded-drain streaming scope (r16 probe): a drain retains no
@@ -53,6 +54,9 @@ object GraftSession {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    // session contract: parquet nanosecond timestamps surface as
+    // BIGINT nanos everywhere (graft does integer epoch math on
+    // them); set once here so no loader flips conf mid-session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }

@@ -64,4 +64,18 @@ object Registry {
 
   private lazy val index: Map[String, Op] = all.map(op => op.name -> op).toMap
   def byName(name: String): Op = index(name)
+
+  /** The ops a run covers, sorted by name: every op for `None`, else
+    * those a comma list names (names trimmed, blanks dropped). An
+    * unknown name fails fast, naming it, instead of silently running a
+    * partial (or empty) set.
+    */
+  def select(names: Option[String]): Seq[Op] = {
+    val only = names.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { ns =>
+      val unknown = ns -- index.keySet
+      require(unknown.isEmpty, s"ops not registered: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    all.filter(op => only.forall(_.contains(op.name))).sortBy(_.name)
+  }
 }

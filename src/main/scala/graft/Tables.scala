@@ -20,9 +20,9 @@ object Tables {
     * sub-micro truncation ambiguity, and one normalization point for
     * whatever physical type the generator writes:
     *   - parquet nanos (`timestamp[ns]`): read as LongType via the
-    *     session-contract `nanosAsLong` conf (set in
-    *     [[GraftSession.build]]/[[GraftSession.tune]], NOT here — a
-    *     conf flip inside a loader would race concurrent reads);
+    *     session-contract `nanosAsLong` conf (set by
+    *     [[GraftSession.build]], NOT here — a conf flip inside a
+    *     loader would race concurrent reads);
     *   - parquet micros (`timestamp[us]`, surfaced as TIMESTAMP_NTZ):
     *     cast through the UTC session zone and widen micros → nanos.
     * The DuckDB oracle side needs no branch: `epoch_ns(ts)` yields
@@ -30,9 +30,9 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     require(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true",
-      "graft sessions read parquet nanos as BIGINT; build the session via GraftSession.build/tune")
+      "graft sessions read parquet nanos as BIGINT; build the session via GraftSession.build")
     require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
-      "graft sessions pin UTC; build the session via GraftSession.build/tune")
+      "graft sessions pin UTC; build the session via GraftSession.build")
     val raw = load(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw

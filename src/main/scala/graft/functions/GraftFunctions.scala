@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -14,20 +13,19 @@ import java.security.MessageDigest
   * microseconds per row, with BIT-IDENTICAL results (same fold order,
   * same md5-derived integers), so the DuckDB oracles are unchanged.
   *
-  * Registered as SQL temp functions (graft_simhash60,
-  * graft_array_dot) so operator code can keep using `expr(...)`.
+  * [[kernels]] is the one list of them by SQL name; the session
+  * extensions ([[graft.plans.GraftExtensions]]) inject it into every
+  * graft session, so operator code can keep using `expr(...)`.
   */
 object GraftFunctions {
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_simhash60", exprs => SimHash60(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_phash60", exprs => Phash60(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_array_dot", exprs => ArrayDot(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_shingles3", exprs => Shingles3(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_minhash32", exprs => MinHash32(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_bpe_count", exprs => BpeCount(exprs.head), "scala_udf")
-  }
+  val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_simhash60" -> (es => SimHash60(es.head)),
+    "graft_phash60" -> (es => Phash60(es.head)),
+    "graft_array_dot" -> (es => ArrayDot(es(0), es(1))),
+    "graft_shingles3" -> (es => Shingles3(es.head)),
+    "graft_minhash32" -> (es => MinHash32(es.head)),
+    "graft_bpe_count" -> (es => BpeCount(es.head)))
 
   private val localMd5 = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")

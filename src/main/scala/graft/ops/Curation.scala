@@ -212,7 +212,6 @@ object Curation {
   private val RefreshCcRounds = 20
 
   private def refreshIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.load(s, dir, "documents")
     val thr = docs.agg(max(col("doc_id"))).head().getLong(0) * 9 / 10
     val isEval =

@@ -26,7 +26,6 @@ object Dedup {
     * out of near-dup scope.
     */
   private def withShingles(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     TextOps.withTokens(df)
       .filter(size(col("toks")) >= 3)
       .withColumn("sh", expr("graft_shingles3(toks)"))
@@ -607,7 +606,6 @@ object Dedup {
   private val HamMax = SimBands - 1 // pigeonhole: ≤4 diffs can't touch all 5 bands
 
   private def simhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // native expression: same md5-derived 60-bit ids + weighted bit
     // votes as the interpreted HOF form, ~1000× cheaper per row
     val base = TextOps.withTokens(Tables.load(s, dir, "documents"))
@@ -657,7 +655,6 @@ object Dedup {
   // REAL scale path.
   // ---------------------------------------------------------------
   private[graft] def withNorm(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("nrm", expr("graft_array_dot(v, v)"))
   }
@@ -686,8 +683,7 @@ object Dedup {
     val e = withNorm(emb).select(col("vec_id"), col("v"), col("nrm"))
     val bandVals = (0 until bands).map { j =>
       val bits = (0 until planesPerBand).map { r =>
-        val arr = planes(j * planesPerBand + r).mkString("array(", ", ", ")")
-        s"(CASE WHEN aggregate(zip_with(v, $arr, (x, p) -> x * CAST(p AS DOUBLE)), CAST(0 AS DOUBLE), (s2, x) -> s2 + x) > 0 THEN ${1 << r} ELSE 0 END)"
+        s"(CASE WHEN ${Similarity.planeDot(planes(j * planesPerBand + r))} > 0 THEN ${1 << r} ELSE 0 END)"
       }
       expr(bits.mkString(" + "))
     }

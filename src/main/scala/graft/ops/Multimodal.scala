@@ -277,7 +277,6 @@ object Multimodal {
     new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
 
   private def phash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = withPayload(Tables.load(s, dir, "documents"))
       .filter(octet_length(col("payload")) >= 4)
       // byte 4-grams of the payload; the ASCII guard in withPayload
@@ -390,7 +389,6 @@ object Multimodal {
   private val ShotCutBits = 24
 
   private def shotBoundary(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val vids = withPayload(Tables.load(s, dir, "documents"))
       .filter(col("media_type") === "video")

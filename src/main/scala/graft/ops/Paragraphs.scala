@@ -57,7 +57,6 @@ object Paragraphs {
   private val MinChunkToks = 6
 
   private[graft] def chunkRel(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = TextOps.withTokens(Tables.load(s, dir, "documents"))
       .filter(size(col("toks")) >= 3)
     // A position i (1-based, i >= 3) starts a new chunk when the

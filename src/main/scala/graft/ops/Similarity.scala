@@ -78,10 +78,18 @@ object Similarity {
 
   private[ops] val planes: Seq[Seq[Int]] = planesFor(NPlanes)
 
+  /** SQL for `v`'s signed sum against a ±1 hyperplane, on the native
+    * kernel. Bit-identical to the interpreted
+    * `aggregate(zip_with(v, plane, (x, p) -> x * CAST(p AS DOUBLE)), 0D, (s, x) -> s + x)`:
+    * multiplying by ±1.0 is exact, and the fold order and null padding
+    * are the same (GraftFunctionsSpec).
+    */
+  private[ops] def planeDot(plane: Seq[Int]): String =
+    plane.map(p => s"${p}D").mkString("graft_array_dot(v, array(", ", ", "))")
+
   private def withBucket(df: DataFrame): DataFrame = {
     val bits = planes.zipWithIndex.map { case (plane, i) =>
-      val arr = plane.mkString("array(", ", ", ")")
-      s"CASE WHEN aggregate(zip_with(v, $arr, (x, p) -> x * CAST(p AS DOUBLE)), CAST(0 AS DOUBLE), (s2, x) -> s2 + x) > 0 THEN ${1 << i} ELSE 0 END"
+      s"CASE WHEN ${planeDot(plane)} > 0 THEN ${1 << i} ELSE 0 END"
     }
     df.withColumn("bucket", expr(bits.mkString("", " + ", "")))
   }
@@ -694,8 +702,7 @@ object Similarity {
     val e = emb(s, dir)
     val bandVals = (0 until RangeBands).map { j =>
       val bits = (0 until RangePlanesPerBand).map { r =>
-        val arr = fam(j * RangePlanesPerBand + r).mkString("array(", ", ", ")")
-        s"(CASE WHEN aggregate(zip_with(v, $arr, (x, p) -> x * CAST(p AS DOUBLE)), CAST(0 AS DOUBLE), (s2, x) -> s2 + x) > 0 THEN ${1 << r} ELSE 0 END)"
+        s"(CASE WHEN ${planeDot(fam(j * RangePlanesPerBand + r))} > 0 THEN ${1 << r} ELSE 0 END)"
       }
       expr(bits.mkString(" + "))
     }

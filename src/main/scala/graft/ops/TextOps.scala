@@ -402,7 +402,6 @@ object TextOps {
   private[ops] val ContamPct = 50L // flag at >= 50% shingle overlap
 
   private[ops] def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sh = docs(s, dir)
       .filter(size(col("toks")) >= 3)
       .withColumn("sh", expr("graft_shingles3(toks)"))

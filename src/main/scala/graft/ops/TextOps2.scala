@@ -202,7 +202,6 @@ object TextOps2 {
   // only feeds the >1 indicator, never a fan-out join.
   // ---------------------------------------------------------------
   private def dupCoverage(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val postings = TextOps.withTokens(Tables.load(s, dir, "documents"))
       .filter(size(col("toks")) >= 3)
       .withColumn("sh", expr("graft_shingles3(toks)"))
@@ -328,7 +327,6 @@ object TextOps2 {
   // encoding (a third, spec-side derivation pair-scans token lists).
   // ---------------------------------------------------------------
   private def bpeTokens(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         expr("transform(regexp_extract_all(text, '[A-Za-z]+', 0), w -> lower(w))").as("ws"))

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{ArrayDot, BpeCount, GraftFunctions, MinHash32, Shingles3, SimHash60}
+import graft.functions.{ArrayDot, GraftFunctions}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{
@@ -10,12 +10,14 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
 
-/** Session-extension wiring for the graft kernels — the idiomatic
-  * deployment path (`spark.sql.extensions=graft.plans.GraftExtensions`
-  * or `GraftSession.build`, which applies it programmatically):
+/** Session-extension wiring for the graft kernels — the only way they
+  * get into a session (`spark.sql.extensions=graft.plans.GraftExtensions`,
+  * or `GraftSession.build`, which applies it programmatically to every
+  * graft session):
   *
-  *  - injects the four native functions into the session's function
-  *    registry (no per-DataFrame `register()` calls needed), and
+  *  - injects the six native functions of the one kernel list,
+  *    [[graft.functions.GraftFunctions.kernels]], into the session's
+  *    function registry, and
   *  - injects [[NativeDotProductRule]], an optimizer rule that
   *    rewrites the interpreted higher-order-function dot-product
   *    pattern `aggregate(zip_with(a, b, (x,y) -> x*y), 0d, (s,v) -> s+v)`
@@ -29,13 +31,7 @@ import org.apache.spark.sql.types.DoubleType
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-      "graft_simhash60" -> (es => SimHash60(es.head)),
-      "graft_shingles3" -> (es => Shingles3(es.head)),
-      "graft_minhash32" -> (es => MinHash32(es.head)),
-      "graft_array_dot" -> (es => ArrayDot(es(0), es(1))),
-      "graft_bpe_count" -> (es => BpeCount(es.head)))
-    fns.foreach { case (name, builder) =>
+    GraftFunctions.kernels.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft.functions.GraftFunctions", name),

@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftFunctionsSpec extends AnyFunSuite with SparkSuite {
 
   test("graft_simhash60 equals the interpreted HOF formulation") {
-    GraftFunctions.register(spark)
     val df = graft.ops.TextOps.withTokens(Tables.load(spark, sfDir, "documents"))
       .withColumn("native", expr("graft_simhash60(toks)"))
       .withColumn("hs", expr("transform(toks, t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))"))
@@ -23,7 +22,6 @@ class GraftFunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_shingles3 equals the interpreted formulation incl. order") {
-    GraftFunctions.register(spark)
     val df = graft.ops.TextOps.withTokens(Tables.load(spark, sfDir, "documents"))
       .filter(size(col("toks")) >= 3)
       .withColumn("native", expr("graft_shingles3(toks)"))
@@ -34,7 +32,6 @@ class GraftFunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_minhash32 equals the interpreted per-perm array_min form") {
-    GraftFunctions.register(spark)
     val mins = GraftFunctions.minhashPerms.toSeq.map { case (a, b) =>
       s"array_min(transform(sids, x -> ($a * x + $b) % 2147483647))"
     }
@@ -49,7 +46,6 @@ class GraftFunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_array_dot equals the interpreted fold, including FP order") {
-    GraftFunctions.register(spark)
     val df = Tables.load(spark, sfDir, "embeddings")
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("w", expr("reverse(v)"))
@@ -61,7 +57,6 @@ class GraftFunctionsSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("graft_array_dot on ragged arrays is NULL, matching zip_with null-poisoning") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
         (Array(1.0, 2.0, 3.0), Array(4.0, 5.0)),    // ragged → NULL

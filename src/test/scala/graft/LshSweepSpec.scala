@@ -15,7 +15,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class LshSweepSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val sigs: DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     graft.ops.TextOps.withTokens(Tables.load(spark, sfDir, "documents"))
       .filter(size(col("toks")) >= 3)
       .withColumn("sh", expr("graft_shingles3(toks)"))

@@ -25,7 +25,6 @@ class PhashSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("native phash60 kernel is bit-identical to the interpreted HOF form") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.load(spark, sfDir, "documents")
       .filter(octet_length(col("text")) >= 4)
       .select(

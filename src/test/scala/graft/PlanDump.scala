@@ -10,11 +10,7 @@ object PlanDump {
     val dir = args(0); val out = args(1); val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build("graft-plandump", s"local[$cpus]", cpus.toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     names.foreach { n =>
       val df = Registry.byName(n).run(spark, dir)

@@ -13,6 +13,16 @@ class RegistrySpec extends AnyFunSuite with SparkSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("select trims names, fails on unknown ones by name, and None selects all 292") {
+    val e = intercept[IllegalArgumentException](
+      Registry.select(Some("q1_pricing_summary,no_such_op")))
+    assert(e.getMessage.contains("no_such_op"))
+    assert(Registry.select(Some(" q6_revenue_delta , q1_pricing_summary,")).map(_.name) ==
+      Seq("q1_pricing_summary", "q6_revenue_delta"))
+    val all = Registry.select(None).map(_.name)
+    assert(all.size == 292 && all == Registry.all.map(_.name).sorted)
+  }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
