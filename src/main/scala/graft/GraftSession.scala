@@ -16,8 +16,16 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Make (or join) the session: builder-time settings only — app
-    * name, master, the graft extensions, shuffle partitions, UI off —
-    * then [[tune]] for every runtime conf.
+    * name, master, the graft extensions, shuffle partitions, UI off,
+    * and [[graft.sources.ForkFreeLocalFileSystem]] as the `file:` file
+    * system — then [[tune]] for every runtime conf.
+    *
+    * The file system is a builder setting because Hadoop caches one
+    * `file:` instance per JVM and user: set here, the context's Hadoop
+    * conf carries it before the first local path resolves, so every
+    * local write (parquet stages, zone writes, stream checkpoints and
+    * state stores) sets its permissions in the JVM instead of forking
+    * a `chmod` per path.
     */
   def build(
       appName: String = "graft",
@@ -34,6 +42,7 @@ object GraftSession {
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.ForkFreeLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

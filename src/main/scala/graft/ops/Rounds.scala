@@ -1,7 +1,8 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Bookkeeping for iterative-loop checkpoints. `localCheckpoint`
   * truncates lineage (keeps per-round replans O(1)) but parks the
@@ -19,8 +20,32 @@ import org.apache.spark.sql.DataFrame
   * cannot recompute the blocks and later access fails; an id-diff
   * alone would risk exactly that. (Same freeing convention as the
   * dedup CC engine at Dedup.clustersComputed.)
+  *
+  * Also home of [[partitionsFor]], the size-derived partition count.
   */
-private[ops] object Rounds {
+private[graft] object Rounds {
+
+  /** The shuffle partition count for `bytes` of input:
+    * `ceil(bytes / advisory)`, clamped to `[1, cap]`. AQE coalesces a
+    * batch shuffle to the advisory size after the fact; a plan that
+    * cannot coalesce, such as a stream whose state partitioning is fixed
+    * at its first batch, applies the same size up front.
+    */
+  def partitionsFor(bytes: Long, advisory: Long, cap: Int): Int = {
+    require(advisory > 0, s"advisory partition size must be positive, got $advisory")
+    val n = bytes / advisory + (if (bytes % advisory == 0) 0 else 1)
+    math.max(1L, math.min(cap.toLong, n)).toInt
+  }
+
+  /** [[partitionsFor]] under `s`'s confs: the advisory size is
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the cap the
+    * session's `spark.sql.shuffle.partitions`.
+    */
+  def partitionsFor(s: SparkSession, bytes: Long): Int = {
+    val conf = s.sessionState.conf
+    partitionsFor(bytes, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      conf.getConf(SQLConf.SHUFFLE_PARTITIONS))
+  }
 
   /** Checkpoint `df`, returning it plus the persisted RDD ids the
     * call created within `df`'s own lineage (pass them to [[free]]

@@ -1,7 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.FileFormat
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StreamingQuery, Trigger}
 
@@ -279,29 +283,64 @@ object EventStream {
     * `FileSystem.rename` — on the local FS an atomic rename(2), no
     * `readlink` — and still writes Hadoop's `.crc` sidecars; Spark's
     * checkpoint checksum still wraps it. Counted with
-    * `tools/count_shellouts.sh`, a stateful drain over 8 state
-    * partitions starts 60 processes (all `chmod`) instead of 236 (176
-    * `readlink`), a stateless one 12 instead of 44.
+    * `tools/count_shellouts.sh`, the default manager forked 176
+    * `readlink`s in a stateful drain over 8 state partitions. The
+    * session's `file:` system no longer forks
+    * ([[graft.sources.ForkFreeLocalFileSystem]]), yet this manager
+    * stays: the default one goes through `FileContext`, whose local
+    * `RawLocalFs` constructs Hadoop's stock `RawLocalFileSystem`
+    * itself, so `fs.file.impl` never reaches it.
     */
   private[graft] val DrainCheckpointManager =
     "spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[org.apache.spark.sql.execution.streaming.checkpointing
         .FileSystemBasedCheckpointFileManager].getName
 
-  /** Shuffle (= state-store) partition scope for every drain. The
-    * drains are bounded — state is at most |users| keys, or
-    * window-grain rows — so the session's 32 partitions would only
-    * multiply per-batch store init and checkpoint cost (a stream-stream
-    * join opens four stores per partition). The conf is read at stream
-    * start.
+  /** The shuffle (= state-store) partition scope of a drain over
+    * `source`, sized from its input: `spark.sql.shuffle.partitions` set
+    * to [[graft.ops.Rounds.partitionsFor]] of the source's bytes
+    * ([[sourceBytes]]), at most the session's own count. A stream
+    * fixes its state partitioning at the first batch, so AQE cannot
+    * coalesce it later; every stateful batch opens one store per
+    * partition and operator and writes a delta and its `.crc` for
+    * each. A sf0.01 source (well under one 64 MB advisory size) drains
+    * on one partition instead of a fixed 8. A source that is not a file
+    * source has no size and keeps the session's count (the cap). The
+    * conf is read at stream start.
     */
-  private[streaming] val DrainPartitions = "spark.sql.shuffle.partitions" -> "8"
+  private[streaming] def partitionScope(source: DataFrame): (String, String) =
+    SQLConf.SHUFFLE_PARTITIONS.key -> graft.ops.Rounds.partitionsFor(
+      source.sparkSession, sourceBytes(source).getOrElse(Long.MaxValue)).toString
+
+  /** The byte total under `df`'s streaming sources, listed through the
+    * Hadoop `FileSystem` — or `None` unless every streaming leaf of the
+    * plan is a file source (`StreamingRelation` over a `FileFormat`).
+    */
+  private[streaming] def sourceBytes(df: DataFrame): Option[Long] = {
+    val leaves = df.queryExecution.analyzed.collectLeaves().filter(_.isStreaming)
+    val files = leaves.collect {
+      case r: StreamingRelation if classOf[FileFormat].isAssignableFrom(r.dataSource.providingClass) =>
+        r.dataSource
+    }
+    if (leaves.isEmpty || files.size < leaves.size) None
+    else {
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      val paths = files.flatMap { ds =>
+        ds.paths ++ ds.options.collect { case (k, v) if k.equalsIgnoreCase("path") => v }
+      }.distinct
+      Some(paths.map { path =>
+        val p = new Path(path)
+        val fs = p.getFileSystem(conf)
+        Option(fs.globStatus(p)).toSeq.flatten.map(st => fs.getContentSummary(st.getPath).getLength).sum
+      }.sum)
+    }
+  }
 
   private val drainCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Drain `df` once: AvailableNow into a memory sink under a unique
     * query name and a fresh checkpoint ([[withCheckpoint]]), with
-    * shuffle partitions scoped to [[DrainPartitions]]. Returns the
+    * shuffle partitions sized from the source ([[partitionScope]]). Returns the
     * drained rows and the finished query (its `recentProgress` stays
     * readable). The rows are resolved before the sink's temp view is
     * dropped and the checkpoint deleted, so a drain leaves nothing in
@@ -312,7 +351,7 @@ object EventStream {
     val name = s"graft_stream_drain_${drainCounter.incrementAndGet()}"
     withCheckpoint(s) { ckpt =>
       try {
-        val q = graft.GraftSession.withConf(s, DrainPartitions) {
+        val q = graft.GraftSession.withConf(s, partitionScope(df)) {
           runAvailableNow(df, name, mode, ckpt)
         }
         (s.table(name), q)

@@ -725,8 +725,8 @@ object StreamOps {
     def agg(df: DataFrame): DataFrame =
       df.groupBy("user_id")
         .agg(sum(col("n_events")).as("n_events"), max(col("last")).as("last"))
-    val writer = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-      .writeStream
+    val source = s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    val writer = source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val batchAgg = batch.select(col("user_id"), lit(1L).as("n_events"),
           struct(expr("unix_timestamp(ts)").as("es"), col("event_id"),
@@ -740,14 +740,14 @@ object StreamOps {
         ()
       }
     // the four foreachBatch merges each shuffle a |users|-sized
-    // aggregate — 8 partitions, not the session's 32 (no stream
-    // state here, but the per-merge shuffle constants are the same
-    // bill). stream_file_sink takes only withCheckpoint's manager
-    // scope, not DrainPartitions: it is stateless with no shuffle
-    // (pass-through sink), so a partition override would have nothing
-    // to act on.
+    // aggregate — partitions sized from the source as for a drain,
+    // not the session's 32 (no stream state here, but the per-merge
+    // shuffle constants are the same bill). stream_file_sink takes
+    // only withCheckpoint's manager scope: it is stateless with no
+    // shuffle (pass-through sink), so a partition override would have
+    // nothing to act on.
     EventStream.withCheckpoint(s) { ckpt =>
-      graft.GraftSession.withConf(s, EventStream.DrainPartitions) {
+      graft.GraftSession.withConf(s, EventStream.partitionScope(source)) {
         EventStream.awaitAvailableNow(writer.option("checkpointLocation", ckpt))
       }
     }
